@@ -20,8 +20,8 @@ import graft.queries.StateMetrics
   */
 object StateAudit {
 
-  /** The gates that run through runPanes — the custom trigger/session
-    * engines whose state the audit is about. */
+  /** The trigger/session engine gates — the custom engines whose state
+    * the audit is about. */
   val gateNames: Seq[String] = Seq(
     "q_trigger_panes", "q_trigger_algebra", "q_trigger_composite",
     "q_trigger_never", "q_trigger_sliding", "q_trigger_restart",

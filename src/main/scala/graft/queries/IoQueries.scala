@@ -1,13 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.queries.QueryUtil._
+import graft.queries.ReplayFeed.tmp
 
 /** IO surface demonstrations (SURVEY.md §2.5).
   *
@@ -23,23 +22,6 @@ import graft.queries.QueryUtil._
 object IoQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** Fresh scratch dir per call under one per-JVM base that a shutdown
-    * hook deletes recursively — repeated Bench/Verify runs must not
-    * accumulate table copies in the temp filesystem. */
-  private lazy val scratchBase: java.nio.file.Path = {
-    val base = Files.createTempDirectory("graft_io_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files => F}
-      import scala.jdk.CollectionConverters._
-      try F.walk(base).iterator().asScala.toSeq.reverse.foreach(F.deleteIfExists(_))
-      catch { case _: Throwable => () }
-    }))
-    base
-  }
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(scratchBase, prefix).toString
 
   val defs: Map[String, Q] = Map(
 

@@ -1,14 +1,13 @@
 package graft.queries
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.TriggerGateQueries.{NSumFn, paneInput, paneTable}
 import graft.streaming.SessionEngine
 import graft.streaming.SessionEngine.MergingWindowAssigner
-import graft.streaming.TriggerEngine.{Accumulating, Pane}
+import graft.streaming.TriggerEngine.Accumulating
 
 /** Driver gates for the merging-window engine (VERDICT r11 task 1 — core
   * row 40, the last oracle-reachable spec-only row): run
@@ -261,11 +260,9 @@ object SessionGateQueries {
     "q_session_engine" -> { (s, dir) =>
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 4)
-      TriggerGateQueries.runPanes(s, feed,
-        (in: Dataset[(String, Timestamp, Long)]) =>
-          SessionEngine.sessionAggregateWith(
-            in, DynGapAssigner(), java.time.Duration.ZERO,
-            earlyPerBatch = false, Accumulating, TriggerGateQueries.NSumFn))
+      paneTable(ReplayRunner.run(s)(SessionEngine.sessionAggregateWith(
+        paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
+        earlyPerBatch = false, Accumulating, NSumFn)))
     },
 
     // SURVEY §7 hard part 4: merging windows × EARLY firings — the
@@ -276,11 +273,9 @@ object SessionGateQueries {
     "q_session_engine_early" -> { (s, dir) =>
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 8)
-      TriggerGateQueries.runPanes(s, feed,
-        (in: Dataset[(String, Timestamp, Long)]) =>
-          SessionEngine.sessionAggregateWith(
-            in, DynGapAssigner(), java.time.Duration.ZERO,
-            earlyPerBatch = true, Accumulating, TriggerGateQueries.NSumFn))
+      paneTable(ReplayRunner.run(s)(SessionEngine.sessionAggregateWith(
+        paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
+        earlyPerBatch = true, Accumulating, NSumFn)))
     },
 
     // Checkpoint-restart durability for the MERGING engine (the
@@ -295,15 +290,11 @@ object SessionGateQueries {
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 4)
       val (nKeys, nSessions) = sessionStats(s, dir)
-      TriggerGateQueries.runPanesWithRestart(s, feed,
-        (in: Dataset[(String, Timestamp, Long)]) =>
-          SessionEngine.sessionAggregateWith(
-            in, DynGapAssigner(), java.time.Duration.ZERO,
-            earlyPerBatch = false, Accumulating, TriggerGateQueries.NSumFn),
-        onPeak = Some(sessionBudget(nKeys, nSessions)),
-        // changelog checkpointing enabled in r15: the byte budget is now
-        // calibrated against memtable-arena accounting (see sessionBudget)
-        changelog = true)
+      paneTable(ReplayRunner.run(s, restartFeed = Some(feed),
+          onPeak = Some(sessionBudget(nKeys, nSessions)))(
+        SessionEngine.sessionAggregateWith(
+          paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
+          earlyPerBatch = false, Accumulating, NSumFn)))
     },
 
     // VERDICT r12 task 5: merging windows × LATE firings — held-out
@@ -321,16 +312,12 @@ object SessionGateQueries {
       // retained until the flush batches — the total session count IS
       // the retained-state ceiling the byte budget scales with
       val (nKeys, nSessions) = sessionStats(s, dir)
-      TriggerGateQueries.runPanes(s, feed,
-        (in: Dataset[(String, Timestamp, Long)]) =>
-          SessionEngine.sessionAggregateWith(
-            in, DynGapAssigner(), java.time.Duration.ofMillis(latenessMs),
-            earlyPerBatch = false, Accumulating, TriggerGateQueries.NSumFn,
-            latePerBatch = true),
-        onPeak = Some(sessionBudget(nKeys, nSessions)),
-        // changelog checkpointing enabled in r15: the byte budget is now
-        // calibrated against memtable-arena accounting (see sessionBudget)
-        changelog = true)
+      paneTable(ReplayRunner.run(s,
+          onPeak = Some(sessionBudget(nKeys, nSessions)))(
+        SessionEngine.sessionAggregateWith(
+          paneInput(s, feed), DynGapAssigner(),
+          java.time.Duration.ofMillis(latenessMs),
+          earlyPerBatch = false, Accumulating, NSumFn, latePerBatch = true)))
     },
   )
 

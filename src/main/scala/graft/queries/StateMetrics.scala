@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (VERDICT r12 task 7): the 100 TB claim for the trigger/session
   * engines is "state ∝ keys × open windows, never ∝ rows seen", which
   * was argued from the GC design but never measured. Every gate that
-  * runs through [[TriggerGateQueries.runPanes]] records the peak
+  * runs through [[ReplayRunner.run]] records the peak
   * RocksDB row count and memory across its micro-batches here (from
   * StreamingQueryProgress.stateOperators); `graft.StateAudit` sweeps
   * the gate family at a fixture scale and renders STATE.md, and
@@ -25,7 +25,7 @@ object StateMetrics {
   def setLabel(l: String): Unit = label = l
 
   /** Record a terminated query's peak state metrics. The peak is ALSO
-    * returned to the caller (runPaneQuery threads it to the gate's
+    * returned to the caller (ReplayRunner.run threads it to the gate's
     * budget callback) so inline assertions never read the global —
     * the buffer/label exist only for the sequential audit main. */
   def record(q: StreamingQuery): Option[Peak] = {

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
@@ -21,8 +20,8 @@ import graft.streaming._
   * VERBATIM — the driver now proves the streaming execution itself,
   * not just the batch-shaped kernel.
   *
-  * Determinism: the feeds are cut on an epoch-aligned adaptive day grid (~4 cells at any sf)
-  * (hour- and 4-hour-aligned, so no slot ever spans two files), files
+  * Determinism: the feeds are cut on an epoch-aligned adaptive day grid
+  * (~2 cells at any sf; hour- and 4-hour-aligned, so no slot ever spans two files), files
   * replay oldest-first one per micro-batch, and every emitted row is a
   * sealed slot whose value depends only on the slot's own rows and its
   * predecessors — batch-boundary-invariant by the seal discipline.
@@ -40,7 +39,7 @@ object StreamChainGateQueries {
     * multi-batch replay (every chain seals slots across ≥2 batch
     * boundaries, and the restart gate still splits mid-feed), at ~2
     * fewer micro-batches of fixed cost per gate. */
-  private val TargetCells = 16
+  private val TargetCells = 2
 
   /** Hourly slot index from a sealed slot_ts (matches the batch legs'
     * `unix_timestamp(ts) DIV 3600`). */
@@ -62,17 +61,17 @@ object StreamChainGateQueries {
     * watermark): +1 day clears every slot end + the 1-hour lateness,
     * the second row makes the first's watermark effect land in a real
     * batch. Each carries its replay sequence (past the last grid cell). */
-  private def flushRows(s: SparkSession, k: Any, maxUs: Long,
+  private def flushRows(s: SparkSession, k: Any, v: Any, maxUs: Long,
                         cellUs: Long): Seq[DataFrame] =
     Seq(1, 2).map(d => s.range(1).select(lit(k).as("k"),
-      timestamp_micros(lit(maxUs + d * DayUs)).as("ts"), lit(0.0).as("v"),
+      timestamp_micros(lit(maxUs + d * DayUs)).as("ts"), lit(v).as("v"),
       lit(maxUs / cellUs + d).as("__seq")))
 
   /** Write the (k, ts, v) frame as an adaptive-grid ordered feed plus two
-    * past-the-end flush rows under `flushKey`; return the feed dir.
-    * ONE bounds agg + ONE write job total (guide §1.2). */
-  private def buildFeed(s: SparkSession, rows: DataFrame,
-                        flushKey: Any): String = {
+    * past-the-end flush rows (`flushKey`, `flushValue`); return the feed
+    * dir. ONE bounds agg + ONE write job total (guide §1.2). */
+  private def buildFeed(s: SparkSession, rows: DataFrame, flushKey: Any,
+                        flushValue: Any): String = {
     val feed = ReplayFeed.tmp("sc_feed")
     rows.persist() // feeds the bounds scan + the one seq-partitioned write
     try {
@@ -83,91 +82,30 @@ object StreamChainGateQueries {
         ReplayFeed.adaptiveCellBounds(rows, "ts", TargetCells)
       val all = rows.withColumn("__seq", ReplayFeed.cellSeq("ts", cellUs))
       ReplayFeed.writeSeqFeed(
-        flushRows(s, flushKey, maxUs, cellUs).foldLeft(all)(_ unionByName _),
+        flushRows(s, flushKey, flushValue, maxUs, cellUs)
+          .foldLeft(all)(_ unionByName _),
         feed)
     } finally { rows.unpersist(); () }
     feed
   }
 
-  /** Replay the feed through `op` as a real AvailableNow streaming
-    * query; return the parquet-sunk result. */
-  private def runStream(s: SparkSession, feed: String, schema: StructType,
-                        op: DataFrame => DataFrame): DataFrame =
-      // no-data batch skipped: the chains' flush rows seal every slot in
-      // a real batch (oracle-proven against the batch legs)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-    val outDir = ReplayFeed.tmp("sc_out"); val ckpt = ReplayFeed.tmp("sc_ckpt")
-    val q = op(stream).writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StateMetrics.debugDurations(q, s"chain:$outDir")
-    s.read.parquet(outDir)
-  }
-
-  /** [[runStream]] interrupted by a REAL checkpoint restart (VERDICT r13
-    * task 3 — the q_trigger_restart device applied to a sealed-chain
-    * processor): the feed's second half is held out, a first query
-    * drains the visible half and terminates, the held files move back,
-    * and a brand-new query resumes from the same checkpoint. The chain's
-    * ListState buffers (unsealed slot rows) and the sealed frontier
-    * (last sealed slot + carried recurrence state) must survive the
-    * RocksDB round-trip, or the post-restart recurrence visibly diverges
-    * from the uninterrupted batch-leg oracle. */
-  private def runStreamWithRestart(s: SparkSession, feed: String,
-                                   schema: StructType,
-                                   op: DataFrame => DataFrame): DataFrame =
-      // no-data batch skipped: flush-row design, oracle-proven (see runStream)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val outDir = ReplayFeed.tmp("scr_out"); val ckpt = ReplayFeed.tmp("scr_ckpt")
-    def run(): Unit = {
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      val q = op(stream).writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val listing = Files.list(Paths.get(feed))
-    val all =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally listing.close()
-    val split = all.size / 2
-    require(split >= 1 && split < all.size,
-      s"feed too small to split for the restart gate (${all.size} files)")
-    val stage = Paths.get(ReplayFeed.tmp("scr_stage"))
-    val held = all.drop(split)
-    held.foreach(f => Files.move(f, stage.resolve(f.getFileName)))
-    run()
-    val phase1 = s.read.parquet(outDir).count()
-    require(phase1 > 0,
-      "chain restart gate: the first phase sealed no slots — the split " +
-        "point is degenerate and the gate would not prove a mid-state restart")
-    held.foreach(f => Files.move(stage.resolve(f.getFileName), f))
-    run() // fresh query object, same checkpoint
-    val total = s.read.parquet(outDir).count()
-    require(total > phase1,
-      "chain restart gate: the resumed query emitted nothing — the " +
-        "restart did not continue the feed")
-    s.read.parquet(outDir)
-  }
-
   private val ktvSchema = StructType.fromDDL("k STRING, ts TIMESTAMP, v DOUBLE")
 
-  /** Shared gate shape for the four (key, slot_ts, …) chains over the
+  /** Shared gate shape for the (key, slot_ts, …) chains over the
     * sampled hourly series: replay, seal, drop the flush key, rename to
-    * the batch leg's columns. */
+    * the batch leg's columns. With `restart`, the replay is interrupted
+    * by a real checkpoint restart (see [[ReplayRunner.run]]): the
+    * chain's buffered unsealed slot rows and its sealed frontier (last
+    * sealed slot + carried recurrence state) must survive the RocksDB
+    * round-trip, or the post-restart recurrence visibly diverges from
+    * the uninterrupted batch-leg oracle. */
   private def hourlyChainGate(s: SparkSession, dir: String,
-                              op: DataFrame => DataFrame,
-                              outCols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val feed = buildFeed(s, sampledEvents(s, dir), "__flush")
-    runStream(s, feed, ktvSchema, op)
+                              op: DataFrame => Dataset[_],
+                              outCols: Seq[org.apache.spark.sql.Column],
+                              restart: Boolean = false): DataFrame = {
+    val feed = buildFeed(s, sampledEvents(s, dir), "__flush", 0.0)
+    ReplayRunner.run(s, restartFeed = Option.when(restart)(feed))(
+        op(ReplayRunner.stream(s, ktvSchema, feed)))
       .filter(col("key") =!= "__flush")
       .select(col("key").as("event_type") +: hourSlot(col("slot_ts")).as("slot") +: outCols: _*)
       .orderBy(col("event_type"), col("slot"))
@@ -179,7 +117,7 @@ object StreamChainGateQueries {
     // points must equal the q_ewma batch recurrence bit for bit.
     "q_stream_ewma" -> { (s, dir) =>
       hourlyChainGate(s, dir,
-        st => EwmaStream.smoothed(st, "k", "ts", "v", alpha = 0.25).toDF(),
+        st => EwmaStream.smoothed(st, "k", "ts", "v", alpha = 0.25),
         Seq(col("v"), col("ewma")))
     },
 
@@ -191,13 +129,9 @@ object StreamChainGateQueries {
     // ewma value; the combined output must still equal the
     // uninterrupted q_ewma batch oracle bit for bit.
     "q_stream_ewma_restart" -> { (s, dir) =>
-      val feed = buildFeed(s, sampledEvents(s, dir), "__flush")
-      runStreamWithRestart(s, feed, ktvSchema,
-          st => EwmaStream.smoothed(st, "k", "ts", "v", alpha = 0.25).toDF())
-        .filter(col("key") =!= "__flush")
-        .select(col("key").as("event_type"), hourSlot(col("slot_ts")).as("slot"),
-          col("v"), col("ewma"))
-        .orderBy(col("event_type"), col("slot"))
+      hourlyChainGate(s, dir,
+        st => EwmaStream.smoothed(st, "k", "ts", "v", alpha = 0.25),
+        Seq(col("v"), col("ewma")), restart = true)
     },
 
     // §2.9 CUSUM drift detection, streaming leg: in-control targets are
@@ -210,7 +144,7 @@ object StreamChainGateQueries {
         .as[(String, Double)].collect().toMap
       hourlyChainGate(s, dir,
         st => CusumStream.drifting(st, "k", "ts", "v", targets,
-          slack = 0.5, threshold = 250.0).toDF(),
+          slack = 0.5, threshold = 250.0),
         Seq(col("v"), col("cusum"), col("alarm")))
     },
 
@@ -218,20 +152,16 @@ object StreamChainGateQueries {
     "q_stream_holt" -> { (s, dir) =>
       hourlyChainGate(s, dir,
         st => HoltStream.trending(st, "k", "ts", "v",
-          alpha = 0.5, beta = 0.25).toDF(),
+          alpha = 0.5, beta = 0.25),
         Seq(col("v"), col("level"), col("trend"), col("forecast")))
     },
 
     // §2.9 gap-fill (LOCF + linear interpolation), streaming leg: the
     // dense grid between sealed observations, identical to q_gapfill.
     "q_stream_gapfill" -> { (s, dir) =>
-      val feed = buildFeed(s, sampledEvents(s, dir), "__flush")
-      runStream(s, feed, ktvSchema,
-          st => GapFillStream.filled(st, "k", "ts", "v").toDF())
-        .filter(col("key") =!= "__flush")
-        .select(col("key").as("event_type"), hourSlot(col("slot_ts")).as("slot"),
-          col("slot_ts"), col("v"), col("ffill"), col("interp"))
-        .orderBy(col("event_type"), col("slot"))
+      hourlyChainGate(s, dir,
+        st => GapFillStream.filled(st, "k", "ts", "v"),
+        Seq(col("slot_ts"), col("v"), col("ffill"), col("interp")))
     },
 
     // §2.9 Holt-Winters additive, streaming leg — the one r10 VERDICT
@@ -246,10 +176,10 @@ object StreamChainGateQueries {
           expr("unix_timestamp(ts) DIV 14400").as("slot"))
         .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("v"))
         .select(col("k"), to_timestamp(col("slot") * 14400).as("ts"), col("v"))
-      val feed = buildFeed(s, obs, "__flush")
-      runStream(s, feed, ktvSchema,
-          st => HoltWintersStream.smoothing(st, "k", "ts", "v", period = 6,
-            slotDuration = java.time.Duration.ofHours(4)).toDF())
+      val feed = buildFeed(s, obs, "__flush", 0.0)
+      ReplayRunner.run(s)(HoltWintersStream.smoothing(
+          ReplayRunner.stream(s, ktvSchema, feed), "k", "ts", "v", period = 6,
+          slotDuration = java.time.Duration.ofHours(4)))
         .filter(col("key") =!= "__flush")
         .select(col("key").as("event_type"),
           (unix_micros(col("slot_ts")) / 14400000000L).cast("long").as("slot"),
@@ -267,25 +197,13 @@ object StreamChainGateQueries {
       val rows = Tables(s, dir).events
         .select(col("user_id").cast("long").as("k"), col("ts"),
           col("event_type").as("v"))
-      val feed = ReplayFeed.tmp("sc_feed")
-      rows.persist()
-      try {
-        val (cellUs, _, maxUs) =
-          ReplayFeed.adaptiveCellBounds(rows, "ts", TargetCells)
-        // flush rows must carry a STEP type (the internal filter drops
-        // other types BEFORE the watermark node) under a reserved user
-        val flush = Seq(1, 2).map(d => s.range(1)
-          .select(lit(-1L).as("k"),
-            timestamp_micros(lit(maxUs + d * DayUs)).as("ts"),
-            lit("view").as("v"), lit(maxUs / cellUs + d).as("__seq")))
-        ReplayFeed.writeSeqFeed(
-          flush.foldLeft(
-            rows.withColumn("__seq", ReplayFeed.cellSeq("ts", cellUs)))(
-            _ unionByName _), feed)
-      } finally { rows.unpersist(); () }
-      runStream(s, feed, StructType.fromDDL("k BIGINT, ts TIMESTAMP, v STRING"),
-          st => FunnelStream.stepCompletions(st, "k", "ts", "v",
-            steps = Seq("view", "click", "purchase")).toDF())
+      // flush rows must carry a STEP type (the internal filter drops
+      // other types BEFORE the watermark node) under a reserved user
+      val feed = buildFeed(s, rows, -1L, "view")
+      ReplayRunner.run(s)(FunnelStream.stepCompletions(
+          ReplayRunner.stream(s,
+            StructType.fromDDL("k BIGINT, ts TIMESTAMP, v STRING"), feed),
+          "k", "ts", "v", steps = Seq("view", "click", "purchase")))
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("step").cast("long").as("step"),
           col("step_name"), col("ts"))
@@ -297,9 +215,9 @@ object StreamChainGateQueries {
     "q_stream_rate_anomaly" -> { (s, dir) =>
       val rows = Tables(s, dir).events
         .select(col("event_type").as("k"), col("ts"), lit(0.0).as("v"))
-      val feed = buildFeed(s, rows, "__flush")
-      runStream(s, feed, ktvSchema,
-          st => RateAnomalyStream.hourlyFlags(st, "k", "ts").toDF())
+      val feed = buildFeed(s, rows, "__flush", 0.0)
+      ReplayRunner.run(s)(RateAnomalyStream.hourlyFlags(
+          ReplayRunner.stream(s, ktvSchema, feed), "k", "ts"))
         .filter(col("event_type") =!= "__flush")
         .select(col("event_type"), col("hour"), col("n"),
           col("trail_sum"), col("trail_cnt"), col("spike_hi"), col("dip_lo"))

@@ -1,14 +1,12 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
 import graft.functions.TextFunctions
 import graft.queries.QueryUtil._
+import graft.queries.ReplayFeed.tmp
 import graft.streaming.{NearDupStream, StreamOps}
 
 /** Driver-gate queries for the three streaming operators that were
@@ -38,20 +36,6 @@ object StreamGateQueries {
   private val wcStreamId = new java.util.concurrent.atomic.AtomicInteger(50000)
 
   type Q = (SparkSession, String) => DataFrame
-
-  private lazy val scratchBase: java.nio.file.Path = {
-    val base = Files.createTempDirectory("graft_stream_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files => F}
-      import scala.jdk.CollectionConverters._
-      try F.walk(base).iterator().asScala.toSeq.reverse.foreach(F.deleteIfExists(_))
-      catch { case _: Throwable => () }
-    }))
-    base
-  }
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(scratchBase, prefix).toString
 
   /** The fixture corpus has no EXACT duplicate texts, which would make
     * the dedup/near-dup gates vacuous — inject one whitespace-mutated
@@ -106,9 +90,8 @@ object StreamGateQueries {
     changes.repartition(3, pmod(col("o_orderkey"), lit(3)))
       .write.mode("overwrite").parquet(feed)
     def startMerge() = {
-      val stream = s.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed)
-      StreamOps.writeStreamMerge(stream, root, Seq("o_orderkey"),
+      StreamOps.writeStreamMerge(
+        ReplayRunner.stream(s, changes.schema, feed), root, Seq("o_orderkey"),
         "o_orderpriority", "ord", ckpt)
     }
     // no-data batch skipped: the CDC sink merges per batch; nothing
@@ -190,20 +173,11 @@ object StreamGateQueries {
       val docs = withInjectedDups(Tables(s, dir).documents)
         .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
       docs.repartition(4).write.mode("overwrite").parquet(src)
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      val survivors = StreamOps.dedupByFingerprint(stream, "text", "ts",
-        lateness = "30 days")
-      val outDir = tmp("sd_out"); val ckpt = tmp("sd_ckpt")
-      // no-data batch skipped: dedup survivors emit in their own batch;
-      // the 30-day lateness means no state ever seals (oracle-proven)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-        val q = survivors.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+      // dedup survivors emit in their own batch; the 30-day lateness
+      // means no state ever seals (oracle-proven without the no-data batch)
+      ReplayRunner.run(s)(StreamOps.dedupByFingerprint(
+          ReplayRunner.stream(s, docs.schema, src), "text", "ts",
+          lateness = "30 days"))
         .groupBy(TextFunctions.fingerprintPortable(col("text")).as("fp"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("fp"))

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.operators.Combine.CombineFn
@@ -219,37 +219,19 @@ object TriggerGateQueries {
     } finally { ev.unpersist(); () }
   }
 
-  /** One AvailableNow run of the pane engine over `feed`, writing panes
-    * to `outDir` with state in `ckpt`. Each call builds a FRESH query
-    * object — a second call with the same `ckpt` is a genuine
-    * checkpoint restart (sources, offsets, and RocksDB state all
-    * restore from disk). */
-  private def runPaneQuery(s: SparkSession, feed: String, outDir: String,
-      ckpt: String,
-      panes: Dataset[(String, Timestamp, Long)] => Dataset[Pane[String, (Long, Long)]])
-      : Option[StateMetrics.Peak] = {
+  /** The ordered feed as the pane engines' typed (key, ts, value) input. */
+  private[queries] def paneInput(s: SparkSession, feed: String)
+      : Dataset[(String, Timestamp, Long)] = {
     import s.implicits._
-    // recentProgress is a RING BUFFER (default 100 entries): the peak
-    // must never fall off the back, so size it well past any gate's
-    // batch count before the metrics read below
-    s.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1000")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "k STRING, ts TIMESTAMP, v BIGINT")
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
+    ReplayRunner.stream(s, StructType.fromDDL("k STRING, ts TIMESTAMP, v BIGINT"), feed)
       .select(col("k").as("_1"), col("ts").as("_2"), col("v").as("_3"))
       .as[(String, Timestamp, Long)]
-    val q = panes(stream).writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StateMetrics.debugDurations(q, s"panes:$outDir")
-    StateMetrics.record(q)
   }
 
-  /** The flattened, flush-filtered pane table at `outDir`. */
-  private def paneTable(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
+  /** The replay runner's pane output, flattened and flush-filtered. Shared
+    * with [[SessionGateQueries]] — the session engine emits the same Pane. */
+  private[queries] def paneTable(panes: DataFrame): DataFrame =
+    panes
       .filter(col("key") =!= "__flush")
       .select(col("key").as("k"),
         unix_micros(col("windowStart")).as("ws_us"),
@@ -259,106 +241,18 @@ object TriggerGateQueries {
         col("value._1").as("n"), col("value._2").as("sum_v"))
       .orderBy(col("k"), col("ws_us"), col("pane_index"))
 
-  /** Run the pane engine over the feed as a real AvailableNow streaming
-    * query; return the flattened, flush-filtered pane table. Shared with
-    * [[SessionGateQueries]] — the session engine emits the same Pane. */
-  /** `onPeak` receives THIS run's state peak directly (never via the
-    * global StateMetrics buffer — a concurrent gate's recording could
-    * not cross-talk into an inline budget assertion). When a budget
-    * callback IS supplied, a missing peak fails loudly instead of
-    * silently skipping the assertion (ADVICE r13: a Spark
-    * progress-reporting change would otherwise leave the gate green
-    * with its state budget unchecked). */
-  private[queries] def runPanes(s: SparkSession, feed: String,
-                       panes: Dataset[(String, Timestamp, Long)] => Dataset[Pane[String, (Long, Long)]],
-                       onPeak: Option[StateMetrics.Peak => Unit] = None,
-                       changelog: Boolean = true)
-      // no-data batch skipped: every trigger/session gate's flush rows
-      // land its final panes in a REAL batch (oracle-proven per gate)
-      : DataFrame = ReplayFeed.withGatePartitions(s,
-        keepNoDataBatches = false, changelog = changelog) {
-    val outDir = tmp("tg_out"); val ckpt = tmp("tg_ckpt")
-    val peak = runPaneQuery(s, feed, outDir, ckpt, panes)
-    onPeak.foreach { cb =>
-      require(peak.nonEmpty,
-        "state-budget gate: no stateOperators metrics in the query's " +
-          "progress events — the inline budget assertion cannot run " +
-          "(did Spark's progress reporting change?)")
-      cb(peak.get)
-    }
-    paneTable(s, outDir)
-  }
-
-  /** [[runPanes]] interrupted by a REAL checkpoint restart (VERDICT r12
-    * task 1): the feed's second half is held OUT of the directory, a
-    * first query drains the visible half and terminates, the held files
-    * move back in (original names + modification times, so replay order
-    * is unchanged), and a brand-new query object resumes from the same
-    * checkpoint over the rest. Open-window accumulators, pane indices,
-    * fired flags, and the watermark must all survive the restart for the
-    * combined pane table to hash-match the uninterrupted oracle. */
-  private[queries] def runPanesWithRestart(s: SparkSession, feed: String,
-      panes: Dataset[(String, Timestamp, Long)] => Dataset[Pane[String, (Long, Long)]],
-      onPeak: Option[StateMetrics.Peak => Unit] = None,
-      changelog: Boolean = true)
-      // no-data batch skipped: flush-row design, oracle-proven (see runPanes)
-      : DataFrame = ReplayFeed.withGatePartitions(s,
-        keepNoDataBatches = false, changelog = changelog) {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val outDir = tmp("tr_out"); val ckpt = tmp("tr_ckpt")
-    val listing = Files.list(Paths.get(feed))
-    val all =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        .sortBy(_.getFileName.toString)
-      finally listing.close()
-    // mid-main split: both phases carry real work, and the open windows
-    // at the cut hold non-trivial accumulator + pane-index state
-    val split = all.size / 2
-    require(split >= 1 && split < all.size,
-      s"feed too small to split for the restart gate (${all.size} files)")
-    val stage = Paths.get(tmp("tr_stage"))
-    val held = all.drop(split)
-    // a supplied budget callback must run on BOTH phases (the resumed
-    // query restores the full open-window state, so a leak that only
-    // manifests post-restart is exactly what phase 2's peak catches),
-    // and a missing peak fails loudly rather than skipping the check
-    def checked(peak: Option[StateMetrics.Peak]): Unit = onPeak.foreach { cb =>
-      require(peak.nonEmpty,
-        "state-budget gate: no stateOperators metrics in the query's " +
-          "progress events — the inline budget assertion cannot run " +
-          "(did Spark's progress reporting change?)")
-      cb(peak.get)
-    }
-    held.foreach(f => Files.move(f, stage.resolve(f.getFileName)))
-    checked(runPaneQuery(s, feed, outDir, ckpt, panes))
-    val phase1 = s.read.parquet(outDir).count()
-    require(phase1 > 0,
-      "restart gate: the first phase emitted no panes — the split point " +
-        "is degenerate and the gate would not prove a mid-state restart")
-    held.foreach(f => Files.move(stage.resolve(f.getFileName), f))
-    checked(runPaneQuery(s, feed, outDir, ckpt, panes)) // fresh query, same checkpoint
-    val total = s.read.parquet(outDir).count()
-    require(total > phase1,
-      "restart gate: the resumed query emitted nothing — the restart did " +
-        "not continue the feed")
-    paneTable(s, outDir)
-  }
-
-  /** The q_trigger_panes engine configuration — shared verbatim with
-    * q_trigger_restart so both run against the same oracle: early AND
-    * late AfterCount(1) firings, ACCUMULATING panes, 2.4-cell lateness
-    * through the Window.into builder. */
-  private def panesEngine(s: SparkSession, g: GateSetup)
-      : Dataset[(String, Timestamp, Long)] => Dataset[Pane[String, (Long, Long)]] = {
+  /** The q_trigger_panes query — shared verbatim with q_trigger_restart
+    * so both run against the same oracle: early AND late AfterCount(1)
+    * firings, ACCUMULATING panes, 2.4-cell lateness through the
+    * Window.into builder. */
+  private def panesQuery(s: SparkSession, g: GateSetup)
+      : Dataset[Pane[String, (Long, Long)]] = {
     import s.implicits._
-    (in: Dataset[(String, Timestamp, Long)]) =>
-      WindowInto.fixedWindows(java.time.Duration.ofMillis(2 * g.cellUs / 1000))
-        .triggering(early = AfterCount(1), late = AfterCount(1))
-        .withAllowedLateness(java.time.Duration.ofMillis(g.cellUs * 12 / 5 / 1000))
-        .accumulatingFiredPanes()
-        .aggregate(in, NSumFn)
+    WindowInto.fixedWindows(java.time.Duration.ofMillis(2 * g.cellUs / 1000))
+      .triggering(early = AfterCount(1), late = AfterCount(1))
+      .withAllowedLateness(java.time.Duration.ofMillis(g.cellUs * 12 / 5 / 1000))
+      .accumulatingFiredPanes()
+      .aggregate(paneInput(s, g.feed), NSumFn)
   }
 
   val defs: Map[String, Q] = Map(
@@ -384,13 +278,13 @@ object TriggerGateQueries {
       // count, so sf0.01 and sf1 must both fit — an accumulator that
       // grew with data volume (the 100 TB failure mode) blows through
       // it immediately.
-      runPanes(s, g.feed, panesEngine(s, g), onPeak = Some { p =>
+      paneTable(ReplayRunner.run(s, onPeak = Some { p =>
         val budget = (g.nKeys + 1L) * 4L * 3L
         require(p.peakRows <= budget,
           s"trigger-engine state budget exceeded: peak ${p.peakRows} state " +
             s"rows > budget $budget (${g.nKeys}+1 keys × 4 live windows × " +
             "3 rows) — state is growing with data, not with open windows")
-      })
+      })(panesQuery(s, g)))
     },
 
     // VERDICT r12 task 1 — checkpoint-restart recovery for the trigger
@@ -406,7 +300,7 @@ object TriggerGateQueries {
     // behavior visibly diverge from the oracle.
     "q_trigger_restart" -> { (s, dir) =>
       val g = setupFeed(s, dir, holdOutLate = true)
-      runPanesWithRestart(s, g.feed, panesEngine(s, g))
+      paneTable(ReplayRunner.run(s, restartFeed = Some(g.feed))(panesQuery(s, g)))
     },
 
     // §2.4 row 41 (trigger algebra) + DISCARDING panes + the empty
@@ -423,11 +317,11 @@ object TriggerGateQueries {
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
       val e = math.max(1L, g.med * 9 / 20).toInt
-      runPanes(s, g.feed, (in: Dataset[(String, Timestamp, Long)]) =>
-        TriggerEngine.windowedAggregate(
-          in, java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
+      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+          paneInput(s, g.feed),
+          java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
           TriggerSpec(early = AfterEach(Seq(AfterCount(e), AfterCount(e)))),
-          Discarding, NSumFn))
+          Discarding, NSumFn)))
     },
 
     // §2.4 row 41, the COMPOSITE half (VERDICT r11 task 2): one
@@ -448,16 +342,16 @@ object TriggerGateQueries {
       val g = setupFeed(s, dir, holdOutLate = false)
       val t = math.max(1L, g.med * 3 / 4)
       val d = math.max(t + 1, g.p80)
-      runPanes(s, g.feed, (in: Dataset[(String, Timestamp, Long)]) =>
-        TriggerEngine.windowedAggregate(
-          in, java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
+      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+          paneInput(s, g.feed),
+          java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
           TriggerSpec(early = OrFinally(
             Repeatedly(AfterFirst(Seq(
               AfterCount((g.med + 1).toInt),
               AfterAll(Seq(AfterCount(t.toInt),
                 AfterCount(math.max(1L, g.med / 2).toInt)))))),
             AfterCount(d.toInt))),
-          Accumulating, NSumFn))
+          Accumulating, NSumFn)))
     },
 
     // §2.4 Never trigger: suppress early and on-time firing — exactly
@@ -466,10 +360,10 @@ object TriggerGateQueries {
     "q_trigger_never" -> { (s, dir) =>
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
-      runPanes(s, g.feed, (in: Dataset[(String, Timestamp, Long)]) =>
-        TriggerEngine.windowedAggregate(
-          in, java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
-          TriggerSpec.never, Accumulating, NSumFn))
+      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+          paneInput(s, g.feed),
+          java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
+          TriggerSpec.never, Accumulating, NSumFn)))
     },
 
     // §2.4 row 41's LAST ungated firing (VERDICT r12 task 2):
@@ -493,12 +387,12 @@ object TriggerGateQueries {
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
       val cellMs = g.cellUs / 1000
-      runPanes(s, g.feed, (in: Dataset[(String, Timestamp, Long)]) =>
-        TriggerEngine.windowedAggregate(
-          in, java.time.Duration.ofMillis(2 * cellMs), java.time.Duration.ZERO,
+      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+          paneInput(s, g.feed),
+          java.time.Duration.ofMillis(2 * cellMs), java.time.Duration.ZERO,
           TriggerSpec(early = AfterProcessingTimeDelay(2 * cellMs)),
           Accumulating, NSumFn,
-          clock = QuantizedEventClock(cellMs)))
+          clock = QuantizedEventClock(cellMs))))
     },
 
     // §2.4 SlidingWindows × the trigger algebra (multi-window
@@ -511,11 +405,11 @@ object TriggerGateQueries {
     "q_trigger_sliding" -> { (s, dir) =>
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
-      runPanes(s, g.feed, (in: Dataset[(String, Timestamp, Long)]) =>
-        TriggerEngine.slidingWindowedAggregate(
-          in, java.time.Duration.ofMillis(2 * g.cellUs / 1000),
+      paneTable(ReplayRunner.run(s)(TriggerEngine.slidingWindowedAggregate(
+          paneInput(s, g.feed),
+          java.time.Duration.ofMillis(2 * g.cellUs / 1000),
           java.time.Duration.ofMillis(g.cellUs / 1000), java.time.Duration.ZERO,
-          TriggerSpec(early = PerBatch), Accumulating, NSumFn))
+          TriggerSpec(early = PerBatch), Accumulating, NSumFn)))
     },
   )
 

@@ -209,28 +209,18 @@ object WindowQueries {
       }
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-      def streamOf(feed: String): DataFrame =
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed)
-      val a = streamOf(feedOf(ev.filter(length(col("event_type")) % 2 === 0)))
-      val b = streamOf(feedOf(ev.filter(length(col("event_type")) % 2 === 1)))
+      val a = feedOf(ev.filter(length(col("event_type")) % 2 === 0))
+      val b = feedOf(ev.filter(length(col("event_type")) % 2 === 1))
       def dsumArr(c: Column): Column =
         aggregate(c, lit(0).cast("decimal(38,4)"),
           (acc, x) => acc + x.cast("decimal(18,4)")).cast("double")
-      val cogbk = graft.streaming.StreamOps.streamCoGroupByKey(
-        a, b, Seq("user_id"), "ts", "1 hour", "10 minutes",
-        col("value"), col("value"))
-      val outDir = ReplayFeed.tmp("cg_out"); val ckpt = ReplayFeed.tmp("cg_ckpt")
-      // no-data batch skipped: the per-side flush rows seal every window
-      // in a real batch (oracle-proven against the batch leg)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-        val q = cogbk.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      // the per-side flush rows seal every window in a real batch
+      // (oracle-proven against the batch leg)
+      val out = ReplayRunner.run(s)(graft.streaming.StreamOps.streamCoGroupByKey(
+        ReplayRunner.stream(s, schema, a), ReplayRunner.stream(s, schema, b),
+        Seq("user_id"), "ts", "1 hour", "10 minutes", col("value"), col("value")))
       ev.unpersist()
-      s.read.parquet(outDir)
+      out
         .filter(col("user_id") >= 0)
         .select(col("window.start").as("w_start"), col("user_id"),
           size(col("a_values")).as("n_a"), dsumArr(col("a_values")).as("sum_a"),
@@ -272,31 +262,22 @@ object WindowQueries {
       }
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "user_id BIGINT, ts TIMESTAMP, value DOUBLE")
-      def streamOf(side: DataFrame, targetCells: Int): DataFrame =
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feedOf(side, targetCells))
       val m3 = length(col("event_type")) % 3
-      val cogbk = graft.streaming.StreamOps.streamCoGroupByKeyN(
-        Seq(
-          ("a", streamOf(ev.filter(m3 === 0), 4), col("value"), "10 minutes"),
-          ("b", streamOf(ev.filter(m3 === 1), 4), col("value"), "10 minutes"),
-          ("c", streamOf(ev.filter(m3 === 2), 2), col("value"), "10 minutes")),
-        Seq("user_id"), "ts", "1 hour")
-      val outDir = ReplayFeed.tmp("cg3_out"); val ckpt = ReplayFeed.tmp("cg3_ckpt")
-      // no-data batch skipped: the per-side flush rows seal every window
-      // in a real batch (oracle-proven against the batch leg)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-        val q = cogbk.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
+      val sides = Seq(("a", 0, 4), ("b", 1, 4), ("c", 2, 2)).map {
+        case (name, m, cells) => (name, feedOf(ev.filter(m3 === m), cells))
       }
+      // the per-side flush rows seal every window in a real batch
+      // (oracle-proven against the batch leg)
+      val out = ReplayRunner.run(s)(graft.streaming.StreamOps.streamCoGroupByKeyN(
+        sides.map { case (name, feed) =>
+          (name, ReplayRunner.stream(s, schema, feed), col("value"), "10 minutes")
+        },
+        Seq("user_id"), "ts", "1 hour"))
       ev.unpersist()
       def dsumArr(c: Column): Column =
         aggregate(c, lit(0).cast("decimal(38,4)"),
           (acc, x) => acc + x.cast("decimal(18,4)")).cast("double")
-      s.read.parquet(outDir)
+      out
         .filter(col("user_id") >= 0)
         .select(col("window.start").as("w_start"), col("user_id"),
           size(col("a_values")).as("n_a"), dsumArr(col("a_values")).as("sum_a"),
