@@ -24,8 +24,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2. Lazy, not a
+    * plain val: `core` is declared below and would still be null while
+    * the object initialises. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     core ++ BatchQueries.defs ++ WindowQueries.defs ++ LlmQueries.defs ++ IoQueries.defs ++
       CurationQueries.defs ++ WebQueries.defs ++ AnalyticsQueries.defs ++
       WarehouseQueries.defs ++ GeoQueries.defs ++ StatsQueries.defs ++
@@ -34,7 +36,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     coreOracles ++ BatchQueries.oracles ++ WindowQueries.oracles ++ LlmQueries.oracles ++
       IoQueries.oracles ++ CurationQueries.oracles ++ WebQueries.oracles ++
       AnalyticsQueries.oracles ++ WarehouseQueries.oracles ++ GeoQueries.oracles ++

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
 import graft.Tables
 import graft.operators.{Combine, ElementWise, Grouping, View}
@@ -863,11 +864,18 @@ object BatchQueries {
       // counts stay exact (a single DOUBLE slot for everything would
       // collide distinct BIGINT keys above 2^53 and undercount), and
       // the exchange carries ~17 bytes/row instead of a column-name
-      // string plus a stringified value
-      val longCols = Set("l_orderkey", "l_suppkey")
+      // string plus a stringified value. The slot follows the column's
+      // declared type; a type with no exact slot (a decimal would
+      // collide in a double) fails loudly
       val slots = statCols.zipWithIndex.map { case (c, i) =>
-        if (longCols(c)) s"${i}Y, $c, CAST(NULL AS DOUBLE)"
-        else s"${i}Y, CAST(NULL AS BIGINT), $c"
+        li.schema(c).dataType match {
+          case ByteType | ShortType | IntegerType | LongType =>
+            s"${i}Y, CAST($c AS BIGINT), CAST(NULL AS DOUBLE)"
+          case FloatType | DoubleType =>
+            s"${i}Y, CAST(NULL AS BIGINT), CAST($c AS DOUBLE)"
+          case t => throw new IllegalArgumentException(
+            s"q_table_stats: no NDV slot for $c of type $t")
+        }
       }
       val ndv = li.select(expr("stack(" + statCols.length + ", " +
           slots.mkString(", ") + ") AS (cid, vl, vd)"))

@@ -110,7 +110,20 @@ private[queries] object ReplayFeed {
     *    q_session_restart / q_stream_ewma_restart / q_stream_cdc_restart
     *    gates prove against unchanged oracles. The session byte budgets
     *    are calibrated against the memtable-arena accounting this mode
-    *    reports (see SessionGateQueries.sessionBudget).
+    *    reports (see SessionGateQueries.sessionBudget). What a commit
+    *    still cost was measured, not assumed: it was almost all process
+    *    spawns in the checkpoint file manager (next bullet).
+    *  - `checkpointFileManagerClass` = [[graft.spark.LocalCheckpointFileManager]].
+    *    Without the native Hadoop library, Spark's default manager forks
+    *    `chmod`/`readlink` for every atomic checkpoint file — 16–38 ms
+    *    per file, several files per micro-batch (offset WAL, commit log,
+    *    source and sink logs, one changelog per state store). On the
+    *    stream_replay benchmark (4 cores) that was ~90% of the
+    *    state-store commit time and ~97% of the walCommit /
+    *    commitOffsets / latestOffset time; the java.nio manager writes
+    *    the same files with renames and hard links.
+    *    Restart semantics are unchanged — the four restart gates prove it
+    *    against unchanged oracles.
     *  - `numRecentProgressUpdates` = 1000: recentProgress is a RING
     *    BUFFER (default 100 entries), and a gate's state peak must never
     *    fall off its back before [[StateMetrics.record]] reads it.
@@ -131,6 +144,8 @@ private[queries] object ReplayFeed {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         -> "true",
       "spark.sql.streaming.numRecentProgressUpdates" -> "1000",
+      "spark.sql.streaming.checkpointFileManagerClass"
+        -> classOf[graft.spark.LocalCheckpointFileManager].getName,
       "spark.sql.streaming.noDataMicroBatches.enabled"
         -> keepNoDataBatches.toString)
     val olds = keys.map { case (k, _) => k -> s.conf.getOption(k) }

@@ -133,12 +133,9 @@ object StreamGateQueries {
         require(commits.nonEmpty,
           "cdc restart gate: phase 1 committed no batch — there is no " +
             "merged-but-uncommitted window to replay")
+        // the gate's checkpoint manager (withGatePartitions) writes no
+        // checksum sidecar, so the commit file is the whole record
         F.delete(commits.last)
-        // the local-fs checksum sidecar (.N.crc) renames WITH the commit
-        // file, so a real crash never leaves it orphaned — delete it too
-        // or the resumed query's commit rename hits a stale destination
-        F.deleteIfExists(commits.last
-          .resolveSibling("." + commits.last.getFileName + ".crc"))
         held.foreach(f => F.move(stage.resolve(f.getFileName), f))
         // phase 2: a brand-new query object resumes from the same
         // checkpoint — replays the merged batch, then drains the rest

@@ -17,6 +17,8 @@ class ReplayRunnerSpec extends SparkSpec {
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         -> "false",
       "spark.sql.streaming.numRecentProgressUpdates" -> "77",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")
     val olds = sentinels.map { case (k, _) => k -> spark.conf.getOption(k) }
     sentinels.foreach { case (k, v) => spark.conf.set(k, v) }
