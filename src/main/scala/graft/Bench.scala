@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is reported in "errors" (and
@@ -11,19 +10,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // transformWithState (the trigger-gate queries) requires RocksDB —
-      // the default HDFS-backed store rejects multiple column families
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated subset for local iteration (the driver
+    // never sets this — full sweep remains the default); resolved before
+    // the session starts so a typo fails at once
+    val selected = SparkEntry.subset(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession.get()
     // Warm the session before timing: JVM/codegen warmup and the first
     // parquet-footer reads otherwise land entirely on whichever query runs
     // first (alphabetical), skewing its number by several seconds and
@@ -33,21 +24,6 @@ object Bench {
     // compiled before any timing starts — standard steady-state bench
     // hygiene. Best effort — a warmup failure must not kill the report
     // (per-query failures at the REAL sf are what the errors field is for).
-    // optional comma-separated subset for local iteration (the driver
-    // never sets this — full sweep remains the default)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must fail loudly, not yield an empty vacuously
-    // successful sweep
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    def selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
     // forcing: write to the noop sink — executes the FULL plan. count()
     // let Catalyst prune per-row projections (a select-only query timed
     // as a bare row count of the scan), drop final sorts, AND prune
@@ -80,13 +56,6 @@ object Bench {
     // some arbitrary timed query (observed as a 20s+ one-off on an
     // otherwise sub-2s query)
     System.gc()
-    def esc(s: String): String =
-      s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
     var errors = List.empty[(String, String)]
     // Two timed sweeps, report the per-query MINIMUM. A single pass is at
     // the mercy of whatever else the host is doing: the same sub-second
@@ -116,11 +85,13 @@ object Bench {
     val results = pass1.keys.toSeq.sorted.map { name =>
       name -> math.min(pass1(name), pass2.getOrElse(name, Double.MaxValue))
     }
-    val qs = results.map { case (k, v) => s"\"${esc(k)}\":$v" }.mkString("{", ",", "}")
-    val errJson = errors.reverse.map { case (k, v) => s"\"${esc(k)}\":\"${esc(v)}\"" }
+    val q = SparkEntry.jsonString _
+    val qs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    val errJson = errors.reverse.map { case (k, v) => s"${q(k)}:${q(v)}" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":"${esc(sfDir)}"}""")
+    val cpus = spark.sparkContext.defaultParallelism
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":${q(sfDir)},"cpus":$cpus}""")
     spark.stop()
   }
 }

@@ -2,9 +2,10 @@ package graft
 
 /** The single registry of module-owned persisted-frame caches.
   *
-  * Verify/Bench/Stress/QueryTimer all release between queries to keep
-  * executor memory flat across a sweep; one list here means a new
-  * caching module can't be forgotten at one of the four call sites.
+  * Every main that runs queries in a loop (Verify, Bench, Stress,
+  * StateAudit, QueryTimer) releases between queries to keep executor
+  * memory flat across a sweep; one list here means a new caching module
+  * can't be forgotten at any of those call sites.
   */
 object Caches {
   def releaseAll(): Unit = {

@@ -2,45 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** The one session factory every main runs on.
   *
-  * The reference (GoogleCloudPlatform/DataflowJavaSDK, see
-  * /root/reference/README.md:19) defers all physical planning to the
-  * Dataflow service; our equivalent of that service is Catalyst + AQE,
-  * so the session is where the "runner" configuration lives.
+  * The reference (GoogleCloudPlatform/DataflowJavaSDK, README.md:19)
+  * defers all physical planning to the Dataflow service; our equivalent
+  * of that service is Catalyst + AQE (on by Spark's own defaults), so the
+  * session is where the "runner" configuration lives.
   *
-  * Defaults are chosen for the local[32] test harness but scale up: AQE
-  * re-plans shuffles at runtime (coalesce + skew-join splitting), which is
-  * what survives a 100x data scale-up without re-tuning static partition
-  * counts.
+  * `SPARK_GRAFT_CPUS` (default 32) sets both the local core count and
+  * the shuffle partition count.
   */
 object GraftSession {
 
-  def builder(appName: String = "graft"): SparkSession.Builder = {
+  def get(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession
-      .builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       // events.parquet stores TIMESTAMP(NANOS), which the vectorized reader
       // rejects; reading it as long is the documented path (Tables.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // Streaming state at 100 TB scale wants RocksDB, not the in-memory
-      // HDFS-backed store (SURVEY.md section 4, streaming state backend row).
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
+      // transformWithState (the trigger gates) needs RocksDB: the default
+      // HDFS-backed store rejects multiple column families
+      .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-  }
-
-  def get(appName: String = "graft"): SparkSession = {
-    val s = builder(appName).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -34,6 +34,32 @@ object SparkEntry {
       StreamGateQueries.defs ++ TpchQueries.defs ++ TriggerGateQueries.defs ++
       StreamChainGateQueries.defs ++ SessionGateQueries.defs
 
+  /** The queries a main runs: all of them for `None`, else the registered
+    * entries a comma-separated `spec` names. An unregistered name (or an
+    * empty list) throws — a typo must fail loudly, not yield a vacuously
+    * green sweep. */
+  def subset(spec: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    spec.fold(queries) { s =>
+      val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(queries.keySet)
+      require(names.nonEmpty && unknown.isEmpty,
+        s"query subset '$s' must name registered queries; unknown: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.view.filterKeys(names).toMap
+    }
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * char (< 0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   lazy val oracleSql: Map[String, String] =

@@ -349,13 +349,7 @@ object Stress {
     val queries = only.getOrElse(allQueries)
     val unknown = queries.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown stress queries: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
 
     blowUp(spark, baseDir, workDir, factor)
 

@@ -138,7 +138,7 @@ object Grouping {
     * rows, the common skew case), the other side replicates once per salt
     * value, and the join key becomes (key, salt) — one hot key spreads
     * over `salt` reducers. AQE's runtime skew split is the first answer
-    * (on by default in GraftSession); this is the explicit form for when
+    * (on by Spark's default); this is the explicit form for when
     * the join must keep a particular partitioning or AQE can't see the
     * skew (e.g. skew materializes after a filter). Replication multiplies
     * the other side by `salt` — keep it the small side. */

@@ -21,6 +21,13 @@ class EntryContractSpec extends SparkSpec {
     assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).toSeq.sorted}")
   }
 
+  test("subset selects exactly the named queries and rejects unregistered names") {
+    assert(SparkEntry.subset(Some("q1_agg, q_trigger_panes")).keySet ==
+      Set("q1_agg", "q_trigger_panes"))
+    val e = intercept[IllegalArgumentException](SparkEntry.subset(Some("q1_agg,q_nope")))
+    assert(e.getMessage.contains("q_nope"))
+  }
+
   test("q_sql_surface_audit invokes every GraftExtensions-registered native") {
     val registered = GraftExtensions.functions.map(_._1.funcName)
     assert(registered.nonEmpty)
