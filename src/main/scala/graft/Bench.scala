@@ -45,10 +45,8 @@ object Bench {
     // and touch the real-sf parquet footers so the first timed query
     // doesn't absorb the file-listing/footer reads either
     try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").count()
-      }
+      val tables = Tables(spark, sfDir)
+      Tables.names.foreach(t => tables.t(t).count())
     } catch {
       case e: Throwable => System.err.println(s"[bench] footer warmup skipped: $e")
     }
@@ -91,7 +89,14 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val cpus = spark.sparkContext.defaultParallelism
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":${q(sfDir)},"cpus":$cpus}""")
+    // the effective session config the timings ran with (Spark's default
+    // where the session left a key unset)
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.files.maxPartitionBytes",
+      "spark.sql.session.timeZone", "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+      .map(k => s"${q(k)}:${q(spark.conf.get(k))}").mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_failed":${errors.size},"sf":${q(sfDir)},"cpus":$cpus,"conf":$conf}""")
     spark.stop()
   }
 }

@@ -34,8 +34,8 @@ object GrowFixture {
     def write(df: DataFrame, name: String): Unit =
       df.repartition(32).write.mode("overwrite").parquet(s"$outDir/$name.parquet")
 
-    def read(name: String): DataFrame =
-      spark.read.parquet(s"$baseDir/$name.parquet")
+    val base = Tables(spark, baseDir)
+    def read(name: String): DataFrame = base.t(name)
 
     // fixed dims pass through
     write(read("region"), "region")
@@ -66,7 +66,7 @@ object GrowFixture {
     // instead of extending it, silently turning the organic-growth axis
     // into the duplicate-dense stress axis Stress.blowUp already covers.
     val DayUs = 86400000000L
-    val ev = Tables(spark, baseDir).events
+    val ev = base.events
     val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi")).head()
     val horizonUs = ((b.getLong(1) / DayUs) - (b.getLong(0) / DayUs) + 2) * DayUs

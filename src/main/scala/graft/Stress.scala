@@ -204,7 +204,8 @@ object Stress {
     // duplicate + perturb: token positions (i + 7c) % 37 == 0 get a
     // copy-specific suffix, so each copy differs from the original (and
     // from every other copy) in a distinct ~2.7% token slice.
-    val docs = spark.read.parquet(s"$baseDir/documents.parquet")
+    val base = Tables(spark, baseDir)
+    val docs = base.documents
     val blown = docs
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("text", when(col("copy") === 0, col("text")).otherwise(
@@ -220,7 +221,7 @@ object Stress {
     // embeddings: copy c scales every 13th coordinate (offset by c) by
     // (1 + c/1000) — distinct coordinate slices per copy, cosine to the
     // original ~0.9999, well above every near-dup threshold in use
-    val emb = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val emb = base.embeddings
     val blownEmb = emb
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("embedding", when(col("copy") === 0, col("embedding"))
@@ -238,7 +239,7 @@ object Stress {
     // key*factor+copy re-deals the copies across the same 1024 name
     // combos, multiplying every (prefix, length) block's population
     // ~factor× — exactly the in-block pair blow-up under test)
-    val cust = spark.read.parquet(s"$baseDir/customer.parquet")
+    val cust = base.customer
     cust
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("c_custkey", col("c_custkey") * factor + col("copy"))
@@ -250,7 +251,7 @@ object Stress {
     // derive from s_suppkey Lehmer arithmetic, so factor× suppliers =
     // factor× boxes re-dealt over the same grid; with factor× points the
     // per-cell points×boxes product grows ~factor²
-    val supp = spark.read.parquet(s"$baseDir/supplier.parquet")
+    val supp = base.supplier
     supp
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("s_suppkey", col("s_suppkey") * factor + col("copy"))
@@ -263,7 +264,7 @@ object Stress {
     // customer→supplier graph keeps its node set while every edge's
     // input rows multiply factor×; rank-stats groups (pmod l_suppkey)
     // gain factor× members with massive tie density
-    val li = spark.read.parquet(s"$baseDir/lineitem.parquet")
+    val li = base.lineitem
     li
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("l_orderkey", col("l_orderkey") * factor + col("copy"))
@@ -278,7 +279,7 @@ object Stress {
     // via Tables: the fixture's TIMESTAMP(NANOS) encoding needs the
     // legacy-long read + µs normalization; the rewrite lands as plain
     // TIMESTAMP(MICROS), which Tables reads back natively
-    val ev = Tables(spark, baseDir).events
+    val ev = base.events
     ev
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("event_id", col("event_id") * factor + col("copy"))
@@ -288,7 +289,7 @@ object Stress {
 
     // part: re-keyed duplication — every (p_type, p_brand) ANOVA cell
     // grows factor× members with identical values (pure tie growth)
-    val part = spark.read.parquet(s"$baseDir/part.parquet")
+    val part = base.part
     part
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("p_partkey", col("p_partkey") * factor + col("copy"))
@@ -302,7 +303,7 @@ object Stress {
     // symmetric-diff audits all carry factor× data with an unchanged
     // partition count (the modular update/delete/insert rules keep
     // selecting ~the same fractions of the re-keyed key space)
-    val ord = spark.read.parquet(s"$baseDir/orders.parquet")
+    val ord = base.orders
     ord
       .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("o_orderkey", col("o_orderkey") * factor + col("copy"))
@@ -345,10 +346,12 @@ object Stress {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_stress")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val only = args.lift(3).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val queries = only.getOrElse(allQueries)
-    val unknown = queries.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown stress queries: ${unknown.mkString(", ")}")
+    // an explicit list is checked by the shared selector, and runs in the
+    // order given
+    val queries = args.lift(3).fold(allQueries) { spec =>
+      val picked = SparkEntry.subset(Some(spec))
+      spec.split(',').map(_.trim).filter(picked.contains).distinct.toSeq
+    }
     val spark = GraftSession.get()
 
     blowUp(spark, baseDir, workDir, factor)

@@ -23,7 +23,8 @@ private[queries] object ReplayRunner {
 
   /** Run `query` (evaluated afresh for each phase) as an AvailableNow
     * append-mode parquet sink on a fresh checkpoint; return the sink's
-    * output.
+    * output, read with the schema of the Dataset that wrote it (no
+    * schema-inference job).
     *
     * With `restartFeed`, the run is interrupted by a REAL checkpoint
     * restart: the feed's second half is held out of the directory, a
@@ -49,8 +50,9 @@ private[queries] object ReplayRunner {
       // its final output in a REAL batch (oracle-proven per gate)
       ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
     val outDir = ReplayFeed.tmp("replay_out"); val ckpt = ReplayFeed.tmp("replay_ckpt")
-    def phase(): Unit = {
-      val q = query.writeStream.format("parquet")
+    def phase(): StructType = {
+      val ds = query
+      val q = ds.writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -63,8 +65,9 @@ private[queries] object ReplayRunner {
             "(did Spark's progress reporting change?)")
         cb(peak.get)
       }
+      ds.schema
     }
-    restartFeed match {
+    val schema = restartFeed match {
       case None => phase()
       case Some(feed) =>
         import scala.jdk.CollectionConverters._
@@ -82,18 +85,19 @@ private[queries] object ReplayRunner {
         val stage = Paths.get(ReplayFeed.tmp("replay_stage"))
         val held = all.drop(split)
         held.foreach(f => Files.move(f, stage.resolve(f.getFileName)))
-        phase()
-        val phase1 = s.read.parquet(outDir).count()
+        val schema1 = phase()
+        val phase1 = s.read.schema(schema1).parquet(outDir).count()
         require(phase1 > 0,
           "restart gate: the first phase emitted nothing — the split point " +
             "is degenerate and the gate would not prove a mid-state restart")
         held.foreach(f => Files.move(stage.resolve(f.getFileName), f))
-        phase() // fresh query object, same checkpoint
-        val total = s.read.parquet(outDir).count()
+        val schema2 = phase() // fresh query object, same checkpoint
+        val total = s.read.schema(schema2).parquet(outDir).count()
         require(total > phase1,
           "restart gate: the resumed query emitted nothing — the restart " +
             "did not continue the feed")
+        schema2
     }
-    s.read.parquet(outDir)
+    s.read.schema(schema).parquet(outDir)
   }
 }

@@ -149,7 +149,7 @@ object StreamGateQueries {
     val intact = untouched
       .map(d => Upsert.partitionFileSignature(s, root, d))
       .forall(_.nonEmpty)
-    s.read.parquet(root)
+    s.read.schema(orders.schema).parquet(root)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .withColumn("untouched_present", lit(intact))
@@ -241,17 +241,17 @@ object StreamGateQueries {
       val raw = s.readStream.format("graft-redelivery")
         .option("n", 200).option("rowsPerBatch", 50).option("overlap", 10)
         .load()
+      val deduped = StreamOps.dedupWithinWatermark(
+        StreamOps.withEventTime(raw, "ts", "1 hour"), Seq("record_id"))
       // no-data batch skipped: deduped records emit in their arrival
       // batch; the output has no sealed-window rows (oracle-proven)
       ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-        val q = StreamOps.dedupWithinWatermark(
-            StreamOps.withEventTime(raw, "ts", "1 hour"), Seq("record_id"))
-          .writeStream.format("parquet").option("path", outDir)
+        val q = deduped.writeStream.format("parquet").option("path", outDir)
           .option("checkpointLocation", ckpt).outputMode("append").start()
         q.processAllAvailable()
         q.stop()
       }
-      s.read.parquet(outDir)
+      s.read.schema(deduped.schema).parquet(outDir)
         .select(col("record_id"), unix_micros(col("ts")).as("ts_us"))
         .orderBy(col("record_id"))
     },
@@ -287,7 +287,7 @@ object StreamGateQueries {
         q.processAllAvailable()
         q.stop()
       }
-      s.read.parquet(outDir)
+      s.read.schema(agg.schema).parquet(outDir)
         .select(unix_micros(col("window.start")).as("ws_us"),
           unix_micros(col("window.end")).as("we_us"),
           col("src"), col("n"), col("sum_id"))
@@ -362,7 +362,7 @@ object StreamGateQueries {
         q.processAllAvailable()
         q.stop()
       }
-      s.read.parquet(outDir)
+      s.read.schema(agg.schema).parquet(outDir)
         .select(unix_micros(col("window.start")).as("ws_us"),
           unix_micros(col("window.end")).as("we_us"),
           col("src"), col("n"), col("sum_id"))
@@ -406,13 +406,14 @@ object StreamGateQueries {
       ReplayFeed.withGatePartitions(s, keepNoDataBatches = true) {
         val q = panes.writeStream.format("parquet").option("path", outDir)
           .option("checkpointLocation", ckpt).outputMode("append").start()
-        // a pre-first-commit read throws (no parquet yet) — expected; but a
-        // PERSISTENT read failure must not hide behind the generic deadline
-        // message, so the last error rides along in the require (ADVICE r12)
+        // read with the declared schema, a sink with no committed batch is
+        // empty; a read failure is real, and it must not hide behind the
+        // generic deadline message, so the last error rides along in the
+        // require (ADVICE r12)
         var lastReadError: Option[Throwable] = None
         def emitted(): Map[String, Long] =
           try {
-            val m = s.read.parquet(outDir).groupBy(col("key"))
+            val m = s.read.schema(panes.schema).parquet(outDir).groupBy(col("key"))
               .agg(sum(col("value._1")).as("n")).as[(String, Long)]
               .collect().toMap
             lastReadError = None
@@ -450,7 +451,7 @@ object StreamGateQueries {
         awaitCounts(allCounts)
         q.stop()
       }
-      s.read.parquet(outDir)
+      s.read.schema(panes.schema).parquet(outDir)
         .groupBy(col("key").as("event_type"))
         .agg(sum(col("value._1")).as("n"), sum(col("value._2")).as("sum_v"),
           max(col("paneIndex")).as("__max_idx"))
