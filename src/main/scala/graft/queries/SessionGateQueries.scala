@@ -260,7 +260,7 @@ object SessionGateQueries {
     "q_session_engine" -> { (s, dir) =>
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 4)
-      paneTable(ReplayRunner.run(s)(SessionEngine.sessionAggregateWith(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(SessionEngine.sessionAggregateWith(
         paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
         earlyPerBatch = false, Accumulating, NSumFn)))
     },
@@ -273,7 +273,7 @@ object SessionGateQueries {
     "q_session_engine_early" -> { (s, dir) =>
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 8)
-      paneTable(ReplayRunner.run(s)(SessionEngine.sessionAggregateWith(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(SessionEngine.sessionAggregateWith(
         paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
         earlyPerBatch = true, Accumulating, NSumFn)))
     },
@@ -290,7 +290,8 @@ object SessionGateQueries {
       import s.implicits._
       val feed = buildSessionFeed(s, dir, targetCells = 4)
       val (nKeys, nSessions) = sessionStats(s, dir)
-      paneTable(ReplayRunner.run(s, restartFeed = Some(feed),
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false,
+          restartFeed = Some(feed),
           onPeak = Some(sessionBudget(nKeys, nSessions)))(
         SessionEngine.sessionAggregateWith(
           paneInput(s, feed), DynGapAssigner(), java.time.Duration.ZERO,
@@ -312,7 +313,7 @@ object SessionGateQueries {
       // retained until the flush batches — the total session count IS
       // the retained-state ceiling the byte budget scales with
       val (nKeys, nSessions) = sessionStats(s, dir)
-      paneTable(ReplayRunner.run(s,
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false,
           onPeak = Some(sessionBudget(nKeys, nSessions)))(
         SessionEngine.sessionAggregateWith(
           paneInput(s, feed), DynGapAssigner(),

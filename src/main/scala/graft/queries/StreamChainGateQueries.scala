@@ -104,7 +104,8 @@ object StreamChainGateQueries {
                               outCols: Seq[org.apache.spark.sql.Column],
                               restart: Boolean = false): DataFrame = {
     val feed = buildFeed(s, sampledEvents(s, dir), "__flush", 0.0)
-    ReplayRunner.run(s, restartFeed = Option.when(restart)(feed))(
+    ReplayRunner.run(s, keepNoDataBatches = false,
+        restartFeed = Option.when(restart)(feed))(
         op(ReplayRunner.stream(s, ktvSchema, feed)))
       .filter(col("key") =!= "__flush")
       .select(col("key").as("event_type") +: hourSlot(col("slot_ts")).as("slot") +: outCols: _*)
@@ -177,7 +178,7 @@ object StreamChainGateQueries {
         .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("v"))
         .select(col("k"), to_timestamp(col("slot") * 14400).as("ts"), col("v"))
       val feed = buildFeed(s, obs, "__flush", 0.0)
-      ReplayRunner.run(s)(HoltWintersStream.smoothing(
+      ReplayRunner.run(s, keepNoDataBatches = false)(HoltWintersStream.smoothing(
           ReplayRunner.stream(s, ktvSchema, feed), "k", "ts", "v", period = 6,
           slotDuration = java.time.Duration.ofHours(4)))
         .filter(col("key") =!= "__flush")
@@ -200,7 +201,7 @@ object StreamChainGateQueries {
       // flush rows must carry a STEP type (the internal filter drops
       // other types BEFORE the watermark node) under a reserved user
       val feed = buildFeed(s, rows, -1L, "view")
-      ReplayRunner.run(s)(FunnelStream.stepCompletions(
+      ReplayRunner.run(s, keepNoDataBatches = false)(FunnelStream.stepCompletions(
           ReplayRunner.stream(s,
             StructType.fromDDL("k BIGINT, ts TIMESTAMP, v STRING"), feed),
           "k", "ts", "v", steps = Seq("view", "click", "purchase")))
@@ -216,7 +217,7 @@ object StreamChainGateQueries {
       val rows = Tables(s, dir).events
         .select(col("event_type").as("k"), col("ts"), lit(0.0).as("v"))
       val feed = buildFeed(s, rows, "__flush", 0.0)
-      ReplayRunner.run(s)(RateAnomalyStream.hourlyFlags(
+      ReplayRunner.run(s, keepNoDataBatches = false)(RateAnomalyStream.hourlyFlags(
           ReplayRunner.stream(s, ktvSchema, feed), "k", "ts"))
         .filter(col("event_type") =!= "__flush")
         .select(col("event_type"), col("hour"), col("n"),

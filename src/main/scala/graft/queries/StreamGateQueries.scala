@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,26 +11,33 @@ import graft.queries.QueryUtil._
 import graft.queries.ReplayFeed.tmp
 import graft.streaming.{NearDupStream, StreamOps}
 
-/** Driver-gate queries for the three streaming operators that were
-  * previously spec-only (VERDICT r9 §"Next round" item 4): each runs
-  * either the REAL streaming code over a deterministic file-replayed
-  * stream (q_stream_dedup, q_stream_cdc) or the operator's documented
-  * deterministic batch leg (q_stream_neardup), and lands on an output
-  * whose value is micro-batch-boundary-INVARIANT so DuckDB can replay
-  * it relationally:
+/** Driver gates for the streaming operators, the at-least-once broker
+  * source and the wall-clock pane engine. Each runs the REAL streaming
+  * code (or, for q_stream_neardup, the operator's documented batch leg)
+  * and lands on an output whose value is micro-batch-boundary-INVARIANT,
+  * so DuckDB can replay it relationally. The eight gates and what runs
+  * them:
   *
-  *  - q_stream_dedup: StreamOps.dedupByFingerprint over an AvailableNow
-  *    file stream. Whichever arrival survives per fingerprint, the
-  *    (portable-fingerprint, count=1) projection is batch-split-proof.
-  *  - q_stream_neardup: NearDupStream.nearDupFlagsBatch + invariant
-  *    booleans (exact-dup coverage, recomputed distances, arrival
-  *    order) — the simhash kernel itself is not SQL-replayable, so the
-  *    gate is self-asserting like q_dedup_simhash.
-  *  - q_stream_cdc: StreamOps.writeStreamMerge applied to a change
-  *    feed whose files are KEY-DISJOINT (each key's changes share one
-  *    file → one micro-batch), making the final snapshot independent
-  *    of file/batch ordering; the oracle replays the collapsed merge
-  *    relationally.
+  *  - q_stream_dedup ([[ReplayRunner.run]] over a file replay):
+  *    StreamOps.dedupByFingerprint. Whichever arrival survives per
+  *    fingerprint, the (portable-fingerprint, count=1) projection is
+  *    batch-split-proof.
+  *  - q_stream_neardup (no streaming query): NearDupStream's batch leg
+  *    plus invariant booleans (exact-dup coverage, recomputed
+  *    distances, arrival order). The simhash kernel is not
+  *    SQL-replayable, so the gate is self-asserting like q_dedup_simhash.
+  *  - q_stream_redelivery, q_stream_ts_attr, q_stream_broker
+  *    ([[ReplayRunner.run]] over the graft-redelivery broker source
+  *    under AvailableNow): id-dedup of the redelivered tails, then, for
+  *    the last two, attribute event-time windows ([[brokerWindows]]).
+  *  - q_stream_cdc, q_stream_cdc_restart (the gate's own `drain()` of
+  *    the foreachBatch MERGE query StreamOps.writeStreamMerge starts;
+  *    the restart splits the feed with [[ReplayRunner.splitFeed]]): a
+  *    change feed whose files are KEY-DISJOINT, so the final snapshot
+  *    is independent of file/batch ordering.
+  *  - q_wallclock_panes (its own loop on the default trigger): the
+  *    processing-time timers need the wall clock, so the gate feeds a
+  *    MemoryStream and polls the sink while the query runs.
   */
 object StreamGateQueries {
 
@@ -89,59 +98,40 @@ object StreamGateQueries {
     // key's changes share a file, hence a micro-batch
     changes.repartition(3, pmod(col("o_orderkey"), lit(3)))
       .write.mode("overwrite").parquet(feed)
-    def startMerge() = {
-      StreamOps.writeStreamMerge(
+    def drain(): Unit = {
+      val q = StreamOps.writeStreamMerge(
         ReplayRunner.stream(s, changes.schema, feed), root, Seq("o_orderkey"),
         "o_orderpriority", "ord", ckpt)
+      try q.processAllAvailable() finally q.stop()
     }
     // no-data batch skipped: the CDC sink merges per batch; nothing
     // seals on the trailing watermark (oracle-proven final snapshot)
     ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-      if (!restart) {
-        val q = startMerge()
-        q.processAllAvailable()
-        q.stop()
-      } else {
-        import java.nio.file.{Files => F, Paths}
-        import scala.jdk.CollectionConverters._
-        def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-          val st = F.list(p)
-          try st.iterator().asScala.toSeq finally st.close()
-        }
-        // phase 1: only the first feed file is visible — one batch,
-        // one committed MERGE
-        val all = listDir(Paths.get(feed))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString)
-        require(all.size >= 2,
-          s"cdc restart gate needs a multi-file feed, got ${all.size}")
-        val stage = Paths.get(tmp("cdcr_stage"))
-        val held = all.drop(1)
-        held.foreach(f => F.move(f, stage.resolve(f.getFileName)))
-        val q1 = startMerge()
-        q1.processAllAvailable()
-        q1.stop()
+      if (!restart) drain()
+      else ReplayRunner.splitFeed(feed) {
+        // phase 1: the feed's 2 or 3 files split at size / 2 == 1, so
+        // only the first file is visible — one batch, one committed MERGE
+        val visible = ReplayFeed.listSorted(Paths.get(feed), _.endsWith(".parquet"))
+        require(visible.size == 1,
+          s"cdc restart gate: phase 1 must see one feed file, saw ${visible.size}")
+        drain()
         // the crash window: the batch's MERGE landed in the table but —
         // in the failure being simulated — the engine died before
         // writing the epoch's commit record. Deleting the newest
         // commits/<n> entry puts the checkpoint in exactly that state;
         // the offset and source logs keep the batch's file assignment,
         // so the restarted query MUST re-run it (at-least-once).
-        val commits = listDir(Paths.get(ckpt, "commits"))
-          .filter(_.getFileName.toString.matches("\\d+"))
-          .sortBy(_.getFileName.toString.toLong)
+        val commits = ReplayFeed.listSorted(Paths.get(ckpt, "commits"), _.matches("\\d+"))
         require(commits.nonEmpty,
           "cdc restart gate: phase 1 committed no batch — there is no " +
             "merged-but-uncommitted window to replay")
         // the gate's checkpoint manager (withGatePartitions) writes no
         // checksum sidecar, so the commit file is the whole record
-        F.delete(commits.last)
-        held.foreach(f => F.move(stage.resolve(f.getFileName), f))
+        Files.delete(commits.maxBy(_.getFileName.toString.toLong))
+      } { _ =>
         // phase 2: a brand-new query object resumes from the same
         // checkpoint — replays the merged batch, then drains the rest
-        val q2 = startMerge()
-        q2.processAllAvailable()
-        q2.stop()
+        drain()
       }
     }
     val untouched = Seq("o_orderpriority=4-NOT SPECIFIED",
@@ -154,6 +144,29 @@ object StreamGateQueries {
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .withColumn("untouched_present", lit(intact))
       .orderBy(col("o_orderpriority"))
+  }
+
+  /** The attribute event-time broker gate shared by q_stream_ts_attr
+    * and q_stream_broker: graft-redelivery records (source `options`)
+    * with event time from `attrs.evt_ms` → id-dedup within `lateness` →
+    * a `windowLen` windowed count and id sum per source tag, in append
+    * mode. The last sealed windows emit in the trailing no-data batch
+    * (the broker source has no flush-row device), so the run keeps it. */
+  private def brokerWindows(s: SparkSession, options: Map[String, String],
+                            lateness: String, windowLen: String): DataFrame = {
+    val evt = s.readStream.format("graft-redelivery").options(options).load()
+      .withColumn("evt_ts", timestamp_millis(
+        get_json_object(col("attrs"), "$.evt_ms").cast("long")))
+      .withColumn("src", get_json_object(col("attrs"), "$.src"))
+    val deduped = StreamOps.dedupWithinWatermark(
+      StreamOps.withEventTime(evt, "evt_ts", lateness), Seq("record_id"))
+    ReplayRunner.run(s, keepNoDataBatches = true)(deduped
+        .groupBy(window(col("evt_ts"), windowLen).as("window"), col("src"))
+        .agg(count(lit(1)).as("n"), sum(col("record_id")).as("sum_id")))
+      .select(unix_micros(col("window.start")).as("ws_us"),
+        unix_micros(col("window.end")).as("we_us"),
+        col("src"), col("n"), col("sum_id"))
+      .orderBy(col("ws_us"), col("src"))
   }
 
   val defs: Map[String, Q] = Map(
@@ -172,7 +185,7 @@ object StreamGateQueries {
       docs.repartition(4).write.mode("overwrite").parquet(src)
       // dedup survivors emit in their own batch; the 30-day lateness
       // means no state ever seals (oracle-proven without the no-data batch)
-      ReplayRunner.run(s)(StreamOps.dedupByFingerprint(
+      ReplayRunner.run(s, keepNoDataBatches = false)(StreamOps.dedupByFingerprint(
           ReplayRunner.stream(s, docs.schema, src), "text", "ts",
           lateness = "30 days"))
         .groupBy(TextFunctions.fingerprintPortable(col("text")).as("fp"))
@@ -234,24 +247,16 @@ object StreamGateQueries {
     // exactly-once output is the deterministic [0, n) sequence with
     // broker-assigned timestamps, which DuckDB replays from range().
     "q_stream_redelivery" -> { (s, _) =>
-      val ckpt = tmp("rd_ckpt"); val outDir = tmp("rd_out")
       // 4 micro-batches (not 8): each costs ~1 s of fixed micro-batch
       // overhead at local[32]; 3 redelivered tails of 10 records keep
       // the at-least-once contract under real test
       val raw = s.readStream.format("graft-redelivery")
         .option("n", 200).option("rowsPerBatch", 50).option("overlap", 10)
         .load()
-      val deduped = StreamOps.dedupWithinWatermark(
-        StreamOps.withEventTime(raw, "ts", "1 hour"), Seq("record_id"))
       // no-data batch skipped: deduped records emit in their arrival
       // batch; the output has no sealed-window rows (oracle-proven)
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = false) {
-        val q = deduped.writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.schema(deduped.schema).parquet(outDir)
+      ReplayRunner.run(s, keepNoDataBatches = false)(StreamOps.dedupWithinWatermark(
+          StreamOps.withEventTime(raw, "ts", "1 hour"), Seq("record_id")))
         .select(col("record_id"), unix_micros(col("ts")).as("ts_us"))
         .orderBy(col("record_id"))
     },
@@ -266,32 +271,8 @@ object StreamGateQueries {
     // the final watermark (max evt − 5 s lateness) seals are emitted —
     // exactly win ≤ 8 for n=200 at 1 s period.
     "q_stream_ts_attr" -> { (s, _) =>
-      val ckpt = tmp("ta_ckpt"); val outDir = tmp("ta_out")
-      val raw = s.readStream.format("graft-redelivery")
-        .option("n", 200).option("rowsPerBatch", 50).option("overlap", 10)
-        .load()
-      val evt = raw
-        .withColumn("evt_ts", timestamp_millis(
-          get_json_object(col("attrs"), "$.evt_ms").cast("long")))
-        .withColumn("src", get_json_object(col("attrs"), "$.src"))
-      val deduped = StreamOps.dedupWithinWatermark(
-        StreamOps.withEventTime(evt, "evt_ts", "5 seconds"), Seq("record_id"))
-      val agg = deduped
-        .groupBy(window(col("evt_ts"), "20 seconds").as("window"), col("src"))
-        .agg(count(lit(1)).as("n"), sum(col("record_id")).as("sum_id"))
-      // the last sealed windows emit in the trailing no-data batch (the
-      // broker source has no flush-row device) — keep it
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = true) {
-        val q = agg.writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.schema(agg.schema).parquet(outDir)
-        .select(unix_micros(col("window.start")).as("ws_us"),
-          unix_micros(col("window.end")).as("we_us"),
-          col("src"), col("n"), col("sum_id"))
-        .orderBy(col("ws_us"), col("src"))
+      brokerWindows(s, Map("n" -> "200", "rowsPerBatch" -> "50", "overlap" -> "10"),
+        lateness = "5 seconds", windowLen = "20 seconds")
     },
 
     // §2.9 row 68 under the driver gate: the REAL streaming CDC-apply
@@ -336,37 +317,13 @@ object StreamGateQueries {
     // pure arithmetic over the broker's deterministic id sequence, so
     // DuckDB replays the whole thing from range(0, 240).
     "q_stream_broker" -> { (s, _) =>
-      val ckpt = tmp("bk_ckpt"); val outDir = tmp("bk_out")
-      val raw = s.readStream.format("graft-redelivery")
-        .option("n", 240).option("rowsPerBatch", 60).option("overlap", 12)
-        .option("skewMod", 5).option("skewStepMs", 20000)
-        .load()
-      val evt = raw
-        .withColumn("evt_ts", timestamp_millis(
-          get_json_object(col("attrs"), "$.evt_ms").cast("long")))
-        .withColumn("src", get_json_object(col("attrs"), "$.src"))
       // lateness 100 s > the 80 s max backdating: nothing ever drops,
       // so the oracle is exact; the watermark still HOLDS window
       // finalization back across the skew horizon (sealed windows are
       // those the final watermark = max evt − 100 s passes)
-      val deduped = StreamOps.dedupWithinWatermark(
-        StreamOps.withEventTime(evt, "evt_ts", "100 seconds"), Seq("record_id"))
-      val agg = deduped
-        .groupBy(window(col("evt_ts"), "30 seconds").as("window"), col("src"))
-        .agg(count(lit(1)).as("n"), sum(col("record_id")).as("sum_id"))
-      // the last sealed windows emit in the trailing no-data batch (the
-      // broker source has no flush-row device) — keep it
-      ReplayFeed.withGatePartitions(s, keepNoDataBatches = true) {
-        val q = agg.writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-      }
-      s.read.schema(agg.schema).parquet(outDir)
-        .select(unix_micros(col("window.start")).as("ws_us"),
-          unix_micros(col("window.end")).as("we_us"),
-          col("src"), col("n"), col("sum_id"))
-        .orderBy(col("ws_us"), col("src"))
+      brokerWindows(s, Map("n" -> "240", "rowsPerBatch" -> "60", "overlap" -> "12",
+          "skewMod" -> "5", "skewStepMs" -> "20000"),
+        lateness = "100 seconds", windowLen = "30 seconds")
     },
 
     // The wall-clock pane engine (AfterProcessingTime's guaranteed-firing

@@ -278,7 +278,7 @@ object TriggerGateQueries {
       // count, so sf0.01 and sf1 must both fit — an accumulator that
       // grew with data volume (the 100 TB failure mode) blows through
       // it immediately.
-      paneTable(ReplayRunner.run(s, onPeak = Some { p =>
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false, onPeak = Some { p =>
         val budget = (g.nKeys + 1L) * 4L * 3L
         require(p.peakRows <= budget,
           s"trigger-engine state budget exceeded: peak ${p.peakRows} state " +
@@ -300,7 +300,8 @@ object TriggerGateQueries {
     // behavior visibly diverge from the oracle.
     "q_trigger_restart" -> { (s, dir) =>
       val g = setupFeed(s, dir, holdOutLate = true)
-      paneTable(ReplayRunner.run(s, restartFeed = Some(g.feed))(panesQuery(s, g)))
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false,
+        restartFeed = Some(g.feed))(panesQuery(s, g)))
     },
 
     // §2.4 row 41 (trigger algebra) + DISCARDING panes + the empty
@@ -317,7 +318,7 @@ object TriggerGateQueries {
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
       val e = math.max(1L, g.med * 9 / 20).toInt
-      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(TriggerEngine.windowedAggregate(
           paneInput(s, g.feed),
           java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
           TriggerSpec(early = AfterEach(Seq(AfterCount(e), AfterCount(e)))),
@@ -342,7 +343,7 @@ object TriggerGateQueries {
       val g = setupFeed(s, dir, holdOutLate = false)
       val t = math.max(1L, g.med * 3 / 4)
       val d = math.max(t + 1, g.p80)
-      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(TriggerEngine.windowedAggregate(
           paneInput(s, g.feed),
           java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
           TriggerSpec(early = OrFinally(
@@ -360,7 +361,7 @@ object TriggerGateQueries {
     "q_trigger_never" -> { (s, dir) =>
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
-      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(TriggerEngine.windowedAggregate(
           paneInput(s, g.feed),
           java.time.Duration.ofMillis(2 * g.cellUs / 1000), java.time.Duration.ZERO,
           TriggerSpec.never, Accumulating, NSumFn)))
@@ -387,7 +388,7 @@ object TriggerGateQueries {
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
       val cellMs = g.cellUs / 1000
-      paneTable(ReplayRunner.run(s)(TriggerEngine.windowedAggregate(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(TriggerEngine.windowedAggregate(
           paneInput(s, g.feed),
           java.time.Duration.ofMillis(2 * cellMs), java.time.Duration.ZERO,
           TriggerSpec(early = AfterProcessingTimeDelay(2 * cellMs)),
@@ -405,7 +406,7 @@ object TriggerGateQueries {
     "q_trigger_sliding" -> { (s, dir) =>
       import s.implicits._
       val g = setupFeed(s, dir, holdOutLate = false)
-      paneTable(ReplayRunner.run(s)(TriggerEngine.slidingWindowedAggregate(
+      paneTable(ReplayRunner.run(s, keepNoDataBatches = false)(TriggerEngine.slidingWindowedAggregate(
           paneInput(s, g.feed),
           java.time.Duration.ofMillis(2 * g.cellUs / 1000),
           java.time.Duration.ofMillis(g.cellUs / 1000), java.time.Duration.ZERO,

@@ -216,7 +216,7 @@ object WindowQueries {
           (acc, x) => acc + x.cast("decimal(18,4)")).cast("double")
       // the per-side flush rows seal every window in a real batch
       // (oracle-proven against the batch leg)
-      val out = ReplayRunner.run(s)(graft.streaming.StreamOps.streamCoGroupByKey(
+      val out = ReplayRunner.run(s, keepNoDataBatches = false)(graft.streaming.StreamOps.streamCoGroupByKey(
         ReplayRunner.stream(s, schema, a), ReplayRunner.stream(s, schema, b),
         Seq("user_id"), "ts", "1 hour", "10 minutes", col("value"), col("value")))
       ev.unpersist()
@@ -268,7 +268,7 @@ object WindowQueries {
       }
       // the per-side flush rows seal every window in a real batch
       // (oracle-proven against the batch leg)
-      val out = ReplayRunner.run(s)(graft.streaming.StreamOps.streamCoGroupByKeyN(
+      val out = ReplayRunner.run(s, keepNoDataBatches = false)(graft.streaming.StreamOps.streamCoGroupByKeyN(
         sides.map { case (name, feed) =>
           (name, ReplayRunner.stream(s, schema, feed), col("value"), "10 minutes")
         },

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -32,7 +32,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * and stay gone across a checkpoint restart.
   *
   * Options: `n` (stop after n distinct records), `rowsPerBatch`,
-  * `overlap` (redelivered tail size), `splits`, `startMs`, `periodMs`.
+  * `overlap` (redelivered tail size), `splits`, `startMs`, `periodMs`,
+  * `skewMod` and `skewStepMs` (the attribute event-time skew, see
+  * [[RedeliverySource.Config]]).
+  *
+  * The source supports `Trigger.AvailableNow`: a bounded replay of
+  * `[0, n)` runs to the end in `rowsPerBatch` steps, batch for batch the
+  * same as the default trigger drained with `processAllAvailable`.
   */
 final class RedeliverySourceProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -112,8 +118,13 @@ final case class RedeliveryOffset(count: Long) extends Offset {
 }
 
 final class RedeliveryMicroBatchStream(config: RedeliverySource.Config)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
   override def initialOffset(): Offset = RedeliveryOffset(0L)
+
+  /** Nothing to pin: the data is the fixed range [0, n), and
+    * `latestOffset(start, limit)` already stops at n. Without this
+    * capability AvailableNow would fix its end at the first batch. */
+  override def prepareForTriggerAvailableNow(): Unit = ()
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[RedeliveryOffset].count

@@ -35,7 +35,8 @@ class ReplayRunnerSpec extends SparkSpec {
 
   test("a run split by a checkpoint restart equals the uninterrupted run") {
     Seq("q_trigger_panes" -> "q_trigger_restart",
-      "q_stream_ewma" -> "q_stream_ewma_restart").foreach { case (plain, split) =>
+      "q_stream_ewma" -> "q_stream_ewma_restart",
+      "q_stream_cdc" -> "q_stream_cdc_restart").foreach { case (plain, split) =>
       val q = SparkEntry.queries
       val diff = QueryUtil.symmetricDiffCount(q(plain)(spark, dir),
         q(split)(spark, dir)).head().getLong(0)

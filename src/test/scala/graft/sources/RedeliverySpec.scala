@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.SparkSpec
 import graft.streaming.StreamOps
 
@@ -19,20 +21,26 @@ class RedeliverySpec extends SparkSpec {
   import spark.implicits._
 
   test("the raw stream redelivers: duplicate ids exist without dedup") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-rd-raw-").toString
-    val q = spark.readStream.format("graft-redelivery")
-      .option("n", 50).option("rowsPerBatch", 10).option("overlap", 3)
-      .load()
-      .writeStream.format("memory").queryName("rd_raw")
-      .outputMode("append").option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally q.stop()
-    val ids = spark.table("rd_raw").select("record_id").as[Long].collect().toSeq
-    // 5 batches; batches 2..5 each redeliver 3 unacked records
-    assert(ids.size == 50 + 4 * 3, s"expected 62 deliveries, got ${ids.size}")
-    assert(ids.distinct.sorted == (0L until 50L),
-      "every record delivered at least once")
-    val dupes = ids.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
-    assert(dupes.nonEmpty, "the broker must actually redeliver")
+    // the default trigger drained by processAllAvailable and AvailableNow
+    // run to termination must deliver the same bounded replay
+    Seq("default" -> false, "available_now" -> true).foreach { case (name, availableNow) =>
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-rd-raw-").toString
+      val w = spark.readStream.format("graft-redelivery")
+        .option("n", 50).option("rowsPerBatch", 10).option("overlap", 3)
+        .load()
+        .writeStream.format("memory").queryName(s"rd_raw_$name")
+        .outputMode("append").option("checkpointLocation", ckpt)
+      val q = (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+      try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
+      finally q.stop()
+      val ids = spark.table(s"rd_raw_$name").select("record_id").as[Long].collect().toSeq
+      // 5 batches; batches 2..5 each redeliver 3 unacked records
+      assert(ids.size == 50 + 4 * 3, s"$name: expected 62 deliveries, got ${ids.size}")
+      assert(ids.distinct.sorted == (0L until 50L),
+        s"$name: every record delivered at least once")
+      val dupes = ids.groupBy(identity).filter(_._2.size > 1).keys.toSeq.sorted
+      assert(dupes.nonEmpty, s"$name: the broker must actually redeliver")
+    }
   }
 
   test("id-dedup downstream restores exactly-once") {
