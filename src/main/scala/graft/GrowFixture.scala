@@ -22,17 +22,24 @@ import org.apache.spark.sql.functions._
   */
 object GrowFixture {
 
-  private def copies(df: DataFrame, factor: Int): DataFrame =
+  /** `factor` copies of every row, numbered by a `copy` column 0 until
+    * factor (copy 0 is the original). */
+  private[graft] def copies(df: DataFrame, factor: Int): DataFrame =
     df.withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
 
-  private def rekey(df: DataFrame, factor: Int, keys: String*): DataFrame =
+  /** `factor` copies of every row, each key column re-keyed to
+    * key·factor + copy. */
+  private[graft] def rekey(df: DataFrame, factor: Int, keys: String*): DataFrame =
     keys.foldLeft(copies(df, factor)) { (d, k) =>
       d.withColumn(k, col(k) * factor + col("copy"))
     }.drop("copy")
 
+  /** Write `df` as the fixture table `dir/name.parquet` in 32 files. */
+  private[graft] def write(df: DataFrame, dir: String, name: String): Unit =
+    df.repartition(32).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+
   def grow(spark: SparkSession, baseDir: String, outDir: String, factor: Int): Unit = {
-    def write(df: DataFrame, name: String): Unit =
-      df.repartition(32).write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+    def write(df: DataFrame, name: String): Unit = GrowFixture.write(df, outDir, name)
 
     val base = Tables(spark, baseDir)
     def read(name: String): DataFrame = base.t(name)
@@ -70,8 +77,7 @@ object GrowFixture {
     val b = ev.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi")).head()
     val horizonUs = ((b.getLong(1) / DayUs) - (b.getLong(0) / DayUs) + 2) * DayUs
-    val shifted = ev
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
+    val shifted = copies(ev, factor)
       .withColumn("event_id", col("event_id") * factor + col("copy"))
       .withColumn("user_id", col("user_id") * factor + col("copy"))
       .withColumn("ts", timestamp_micros(
@@ -83,8 +89,7 @@ object GrowFixture {
     // NOT near-dups of their source (shingle-Jaccard ≈ 0.25), so dedup/
     // similarity structures see organic growth, not candidate blow-up
     val docs = read("documents")
-    write(docs
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
+    write(copies(docs, factor)
       .withColumn("text", when(col("copy") === 0, col("text")).otherwise(
         concat_ws(" ", transform(split(col("text"), "\\s+"), (t, i) =>
           when(pmod(i + col("copy"), lit(3)) === 0,
@@ -102,8 +107,7 @@ object GrowFixture {
     // silently turn this "organic growth" fixture into the
     // duplicate-dense worst case Stress.blowUp already covers.)
     val emb = read("embeddings")
-    write(emb
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
+    write(copies(emb, factor)
       .withColumn("embedding", when(col("copy") === 0, col("embedding"))
         .otherwise(transform(col("embedding"), (x, i) =>
           when(pmod(hash(i, col("copy"), col("vec_id")), lit(2)) === 0,

@@ -201,76 +201,53 @@ object Stress {
   /** Duplicate+perturb `baseDir`'s documents + embeddings `factor`× into
     * `workDir` — the worst-case near-dup-dense corpus described above. */
   def blowUp(spark: SparkSession, baseDir: String, workDir: String, factor: Int): Unit = {
+    import GrowFixture.{copies, rekey}
+    def write(df: DataFrame, name: String): Unit = GrowFixture.write(df, workDir, name)
+    val base = Tables(spark, baseDir)
+
     // duplicate + perturb: token positions (i + 7c) % 37 == 0 get a
     // copy-specific suffix, so each copy differs from the original (and
     // from every other copy) in a distinct ~2.7% token slice.
-    val base = Tables(spark, baseDir)
-    val docs = base.documents
-    val blown = docs
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
+    write(copies(base.documents, factor)
       .withColumn("text", when(col("copy") === 0, col("text")).otherwise(
         concat_ws(" ", transform(split(col("text"), "\\s+"), (t, i) =>
           when(pmod(i + col("copy") * 7, lit(37)) === 0,
             concat(t, lit("q"), col("copy"))).otherwise(t)))))
       .withColumn("doc_id", col("doc_id") * factor + col("copy"))
       .withColumn("n_chars", length(col("text")))
-      .drop("copy")
-    blown.repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/documents.parquet")
+      .drop("copy"), "documents")
 
     // embeddings: copy c scales every 13th coordinate (offset by c) by
     // (1 + c/1000) — distinct coordinate slices per copy, cosine to the
     // original ~0.9999, well above every near-dup threshold in use
-    val emb = base.embeddings
-    val blownEmb = emb
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
+    write(copies(base.embeddings, factor)
       .withColumn("embedding", when(col("copy") === 0, col("embedding"))
         .otherwise(transform(col("embedding"), (x, i) =>
           when(pmod(i + col("copy"), lit(13)) === 0,
             x * (lit(1.0f) + col("copy").cast("float") / 1000.0f))
             .otherwise(x))))
       .withColumn("vec_id", col("vec_id") * factor + col("copy"))
-      .drop("copy")
-    blownEmb.repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/embeddings.parquet")
+      .drop("copy"), "embeddings")
 
     // customer: plain duplication with re-keying (no perturbation —
     // names in the linkage queries DERIVE from the key arithmetic, so
     // key*factor+copy re-deals the copies across the same 1024 name
     // combos, multiplying every (prefix, length) block's population
     // ~factor× — exactly the in-block pair blow-up under test)
-    val cust = base.customer
-    cust
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("c_custkey", col("c_custkey") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/customer.parquet")
+    write(rekey(base.customer, factor, "c_custkey"), "customer")
 
     // supplier: same re-keying — the containment query's catchment boxes
     // derive from s_suppkey Lehmer arithmetic, so factor× suppliers =
     // factor× boxes re-dealt over the same grid; with factor× points the
     // per-cell points×boxes product grows ~factor²
-    val supp = base.supplier
-    supp
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("s_suppkey", col("s_suppkey") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/supplier.parquet")
+    write(rekey(base.supplier, factor, "s_suppkey"), "supplier")
 
     // lineitem: l_orderkey re-keys in LOCKSTEP with orders below, so
     // copy c of a lineitem row joins copy c of its order — the
     // customer→supplier graph keeps its node set while every edge's
     // input rows multiply factor×; rank-stats groups (pmod l_suppkey)
     // gain factor× members with massive tie density
-    val li = base.lineitem
-    li
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("l_orderkey", col("l_orderkey") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/lineitem.parquet")
+    write(rekey(base.lineitem, factor, "l_orderkey"), "lineitem")
 
     // events: re-keyed duplication with UNCHANGED timestamps/types —
     // every hourly/4-hour slot's population grows factor× on a fixed
@@ -279,23 +256,11 @@ object Stress {
     // via Tables: the fixture's TIMESTAMP(NANOS) encoding needs the
     // legacy-long read + µs normalization; the rewrite lands as plain
     // TIMESTAMP(MICROS), which Tables reads back natively
-    val ev = base.events
-    ev
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("event_id", col("event_id") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/events.parquet")
+    write(rekey(base.events, factor, "event_id"), "events")
 
     // part: re-keyed duplication — every (p_type, p_brand) ANOVA cell
     // grows factor× members with identical values (pure tie growth)
-    val part = base.part
-    part
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("p_partkey", col("p_partkey") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/part.parquet")
+    write(rekey(base.part, factor, "p_partkey"), "part")
 
     // orders: re-keying into the SAME five priority partitions — every
     // partition grows factor× rows, so the upsert family's touched-
@@ -303,13 +268,7 @@ object Stress {
     // symmetric-diff audits all carry factor× data with an unchanged
     // partition count (the modular update/delete/insert rules keep
     // selecting ~the same fractions of the re-keyed key space)
-    val ord = base.orders
-    ord
-      .withColumn("copy", explode(sequence(lit(0), lit(factor - 1))))
-      .withColumn("o_orderkey", col("o_orderkey") * factor + col("copy"))
-      .drop("copy")
-      .repartition(32).write.mode("overwrite")
-      .parquet(s"$workDir/orders.parquet")
+    write(rekey(base.orders, factor, "o_orderkey"), "orders")
   }
 
   private def force(df: DataFrame): Unit =

@@ -362,19 +362,12 @@ object Dedup {
   /** Min-label propagation connected components over an undirected edge
     * list (id_a, id_b): every node ends with its component's min id.
     * Near-dup clusters are tiny, so this converges in a few iterations;
-    * maxIter bounds the worst case. */
-  /** @param smallLabels when true (default), the per-iteration label
-    *        vector broadcasts into the edge join — right whenever
-    *        |nodes| ≪ |edges| holds or nodes fit in memory (the
-    *        near-dup cluster case: nodes = docs, edges = candidate
-    *        pairs). Without the hint a localCheckpoint'ed frame carries
-    *        no size stats, so the planner shuffle-joined BOTH sides —
-    *        the symmetrized edge list re-shuffled every iteration
-    *        (guide §2.4/§3.1; the [[graft.operators.Graph]] device).
-    *        Flip to false for node sets too big to broadcast. */
+    * maxIter bounds the worst case. The per-iteration label vector
+    * broadcasts into the edge join (a localCheckpoint'ed frame carries
+    * no size stats, so without the hint the planner shuffle-joins BOTH
+    * sides every iteration), gated on the measured node count below. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 30,
-                          smallLabels: Boolean = true): DataFrame = {
+                          maxIter: Int = 30): DataFrame = {
     // Persist the symmetrized edges once: they are re-read twice per
     // iteration, and without this the whole upstream pipeline (e.g. the
     // MinHash candidate generation feeding the edge list) would re-execute
@@ -393,7 +386,7 @@ object Dedup {
     // risking a driver OOM / the 8 GB broadcast cap. 20M ids ≈ 320 MB
     // built — well under the cap, well over every dedup fixture.
     val hint: DataFrame => DataFrame =
-      if (smallLabels && nNodes <= 20000000L) broadcast(_) else identity
+      if (nNodes <= 20000000L) broadcast(_) else identity
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {

@@ -239,8 +239,7 @@ object Graph {
     *              here, positive weights
     * @return (node, label) — community id = min surviving label
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       smallLabels: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val e = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"), col("w").cast("long").as("w"))
@@ -251,20 +250,18 @@ object Graph {
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .localCheckpoint()
     val nodes = sym.select(col("src").as("node")).distinct().localCheckpoint()
-    val hint: DataFrame => DataFrame =
-      if (smallLabels) broadcast(_) else identity
     var labels = nodes.select(col("node"), col("node").as("label"))
       .localCheckpoint()
     for (_ <- 1 to iters) {
       // incident weight per (node, neighbor-label); argmax by
       // (weight desc, label asc) via ONE min-struct aggregation
-      val best = sym.join(hint(labels), col("dst") === col("node"))
+      val best = sym.join(broadcast(labels), col("dst") === col("node"))
         .groupBy(col("src"), col("label"))
         .agg(sum(col("w")).as("__wt"))
         .groupBy(col("src"))
         .agg(min(struct((-col("__wt")).as("__nw"), col("label"))).as("__m"))
         .select(col("src").as("node"), col("__m.label").as("__new"))
-      labels = labels.join(hint(best), Seq("node"), "left")
+      labels = labels.join(broadcast(best), Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
         .localCheckpoint()
     }

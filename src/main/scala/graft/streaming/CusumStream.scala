@@ -3,30 +3,24 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming CUSUM — the unbounded leg of `q_cusum`'s batch semantics:
   * per key, the slot means (DECIMAL(18,4)-exact, the davg device) feed
   * the drift statistic `s₀ = 0, sₜ = max(0, sₜ₋₁ + xₜ − target − slack)`
   * in slot order, alarming when sₜ > threshold — the live form of the
   * change detector a curation pipeline runs on quality-score or volume
-  * series.
-  *
-  * Same chain discipline as [[EwmaStream]]: the recurrence makes every
-  * point depend on every earlier slot of its key, so open slots buffer
-  * as partial (sum, count) accumulators and seal into the chain in slot
-  * order once the watermark passes their end. Append-clean; a timer at
-  * the earliest open slot's end re-awakens quiet keys; the
-  * sealed-frontier guard drops beyond-watermark stragglers instead of
-  * corrupting the chain.
+  * series. Slots enter the chain through the [[SealedSlots]] seal
+  * discipline.
   *
   * The in-control `target` per key is a PARAMETER (the monitored
   * process's known level, configured upstream) — a stream cannot know
   * the batch query's whole-fixture mean ahead of time, and a drift
   * detector that re-estimates its own baseline from the drifting data
-  * would chase the drift. Keys without a target are not monitored
-  * (dropped, documented).
+  * would chase the drift. Keys without a target are not monitored: their
+  * slots seal like any other key's but emit nothing. They are not
+  * filtered out before the processor, because Catalyst would push that
+  * key filter below the watermark node and the filtered rows would stop
+  * advancing the watermark.
   *
   * Arithmetic contract: slot means accumulate as scaled-long 4-dp sums,
   * and each chain step is the same left-associated IEEE tree as
@@ -39,77 +33,8 @@ object CusumStream {
   final case class CusumPoint(key: String, slot_ts: Timestamp, v: Double,
                               cusum: Double, alarm: Boolean)
 
-  /** Partial accumulator of a still-open slot (scaled-long decimal sum). */
-  final case class CuSlotAcc(slotUs: Long, sum4: Long, cnt: Long)
-
   /** The statistic chain: last sealed slot + current CUSUM value. */
   final case class CuChain(lastSlotUs: Long, s: Double)
-
-  final class CusumProcessor(targets: Map[String, Double], slack: Double,
-                             threshold: Double, slotUs: Long)
-      extends StatefulProcessor[String, (String, Long, Double), CusumPoint] {
-
-    @transient private var open: ListState[CuSlotAcc] = _
-    @transient private var chain: ValueState[CuChain] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getListState[CuSlotAcc]("open",
-        Encoders.product[CuSlotAcc], TTLConfig.NONE)
-      chain = getHandle.getValueState[CuChain]("chain",
-        Encoders.product[CuChain], TTLConfig.NONE)
-    }
-
-    private def step(key: String, incoming: List[(Long, Double)],
-                     wmMs: Long): Iterator[CusumPoint] = {
-      val target = targets.get(key) match {
-        case Some(t) => t
-        case None => return Iterator.empty // unmonitored key
-      }
-      val ch = Option(chain.get())
-      val frontier = ch.map(_.lastSlotUs).getOrElse(Long.MinValue)
-      val merged = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      open.get().foreach { a =>
-        val (s, c) = merged.getOrElse(a.slotUs, (0L, 0L))
-        merged(a.slotUs) = (s + a.sum4, c + a.cnt)
-      }
-      incoming.foreach { case (us, v) =>
-        val slot = Math.floorDiv(us, slotUs) * slotUs
-        if (slot > frontier) {
-          val (s, c) = merged.getOrElse(slot, (0L, 0L))
-          merged(slot) = (s + EwmaStream.scaled4(v), c + 1L)
-        }
-      }
-      val (ripe, pending) = merged.toList.partition(_._1 + slotUs <= wmMs * 1000L)
-      val out = List.newBuilder[CusumPoint]
-      var cur = ch
-      ripe.sortBy(_._1).foreach { case (slot, (sum4, cnt)) =>
-        val x = (sum4.toDouble / 10000.0) / cnt
-        // the batch scan's exact tree: ((s + x) − target) − slack
-        val s = math.max(0.0, cur.map(_.s).getOrElse(0.0) + x - target - slack)
-        out += CusumPoint(key, FunnelStreamTime.usToTimestamp(slot), x, s,
-          s > threshold)
-        cur = Some(CuChain(slot, s))
-      }
-      cur.foreach(chain.update)
-      open.clear()
-      if (pending.nonEmpty) {
-        pending.foreach { case (slot, (s, c)) =>
-          open.appendValue(CuSlotAcc(slot, s, c))
-        }
-        getHandle.registerTimer((pending.map(_._1).min + slotUs) / 1000L + 1)
-      }
-      out.result().iterator
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Double)],
-                                 timers: TimerValues): Iterator[CusumPoint] =
-      step(key, rows.map(r => (r._2, r._3)).toList,
-        timers.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[CusumPoint] =
-      step(key, Nil, timers.getCurrentWatermarkInMs())
-  }
 
   /** Drift statistic stream over (keyCol: string, tsCol: timestamp,
     * valueCol: double). Append mode, event-time; sealed points equal
@@ -127,18 +52,19 @@ object CusumStream {
                slotDuration: java.time.Duration = java.time.Duration.ofHours(1))
       : Dataset[CusumPoint] = {
     require(targets.nonEmpty, "no in-control targets: nothing to monitor")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .withWatermark("__t", lateness)
-      .select(col("__k"), unix_micros(col("__t")).as("__us"), col("__v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new CusumProcessor(targets, slack, threshold,
-          slotDuration.toNanos / 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
+    SealedSlots.run(events, keyCol, tsCol, valueCol, lateness,
+      new SealedSlots.Processor[CuChain, CusumPoint](
+        slotDuration.toNanos / 1000L, Encoders.product[CuChain],
+        _.lastSlotUs, { (key, ch, a) =>
+          targets.get(key) match {
+            case None => (CuChain(a.slotUs, 0.0), Nil) // unmonitored key
+            case Some(target) =>
+              val x = a.mean
+              // the batch scan's exact tree: ((s + x) − target) − slack
+              val s = math.max(0.0, ch.map(_.s).getOrElse(0.0) + x - target - slack)
+              (CuChain(a.slotUs, s), Seq(CusumPoint(key,
+                SealedSlots.usToTimestamp(a.slotUs), x, s, s > threshold)))
+          }
+        }))
   }
 }

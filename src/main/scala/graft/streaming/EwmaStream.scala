@@ -3,27 +3,15 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming EWMA — the unbounded leg of `q_ewma`'s batch semantics:
   * per key, the slot means (DECIMAL(18,4)-exact, the davg device)
   * smooth through `y₁ = x₁, yₜ = α·xₜ + (1−α)·yₜ₋₁` in slot order.
   *
-  * The recurrence makes out-of-order arrival strictly harder than for
-  * the funnel/rate processors: EVERY emitted point depends on every
-  * earlier slot of its key, so a slot may only enter the chain once its
-  * mean can no longer change. The FunnelStream watermark-sealing
-  * discipline delivers exactly that: open slots buffer as partial
-  * (sum, count) accumulators in ListState; once the watermark passes a
-  * slot's END it seals, and sealed slots fold into the chain in slot
-  * order, emitting one point each. Append-clean by construction. A
-  * timer at the earliest open slot's end re-awakens quiet keys; a
-  * sealed-frontier guard drops beyond-watermark stragglers instead of
-  * corrupting the chain.
-  *
-  * State per key: one (lastSlot, y) chain record + one partial
-  * accumulator per open slot inside the lateness horizon.
+  * The recurrence makes every point depend on every earlier slot of its
+  * key, so slots enter the chain through the [[SealedSlots]] seal
+  * discipline. State per key: one (lastSlot, y) chain record + the open
+  * slot accumulators.
   *
   * Arithmetic contract: slot means accumulate as scaled-long 4-dp sums
   * (bit-identical to the batch `CAST(value AS DECIMAL(18,4))` sum in
@@ -37,85 +25,8 @@ object EwmaStream {
   final case class EwmaPoint(key: String, slot_ts: Timestamp, v: Double,
                              ewma: Double)
 
-  /** Partial accumulator of a still-open slot. slotUs = slot START in
-    * epoch micros; sum4 = Σ round-half-up(value·10⁴) (the DECIMAL(18,4)
-    * sum as a scaled long). */
-  final case class SlotAcc(slotUs: Long, sum4: Long, cnt: Long)
-
   /** The smoothing chain: last sealed slot + current EWMA value. */
   final case class Chain(lastSlotUs: Long, y: Double)
-
-  /** Spark's double→DECIMAL(18,4) cast rounds the SHORTEST decimal
-    * representation half-up — BigDecimal.valueOf matches that; an exact
-    * binary expansion (new BigDecimal(v)) would not. */
-  private[streaming] def scaled4(v: Double): Long =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(4, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-
-  final class EwmaProcessor(alpha: Double, slotUs: Long)
-      extends StatefulProcessor[String, (String, Long, Double), EwmaPoint] {
-
-    @transient private var open: ListState[SlotAcc] = _
-    @transient private var chain: ValueState[Chain] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getListState[SlotAcc]("open", Encoders.product[SlotAcc],
-        TTLConfig.NONE)
-      chain = getHandle.getValueState[Chain]("chain", Encoders.product[Chain],
-        TTLConfig.NONE)
-    }
-
-    private def step(key: String, incoming: List[(Long, Double)],
-                     wmMs: Long): Iterator[EwmaPoint] = {
-      val ch = Option(chain.get())
-      // slots seal in order, so the chain's last slot IS the frontier
-      val frontier = ch.map(_.lastSlotUs).getOrElse(Long.MinValue)
-      val merged = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      open.get().foreach { a =>
-        val (s, c) = merged.getOrElse(a.slotUs, (0L, 0L))
-        merged(a.slotUs) = (s + a.sum4, c + a.cnt)
-      }
-      incoming.foreach { case (us, v) =>
-        val slot = Math.floorDiv(us, slotUs) * slotUs
-        if (slot > frontier) {
-          val (s, c) = merged.getOrElse(slot, (0L, 0L))
-          merged(slot) = (s + scaled4(v), c + 1L)
-        }
-      }
-      val (ripe, pending) = merged.toList.partition(_._1 + slotUs <= wmMs * 1000L)
-      val out = List.newBuilder[EwmaPoint]
-      var cur = ch
-      ripe.sortBy(_._1).foreach { case (slot, (sum4, cnt)) =>
-        // the davg device: exact 4-dp decimal sum → double → one division
-        val x = (sum4.toDouble / 10000.0) / cnt
-        val y = cur match {
-          case None => x
-          case Some(c) => alpha * x + (1 - alpha) * c.y
-        }
-        out += EwmaPoint(key, FunnelStreamTime.usToTimestamp(slot), x, y)
-        cur = Some(Chain(slot, y))
-      }
-      cur.foreach(chain.update)
-      open.clear()
-      if (pending.nonEmpty) {
-        pending.foreach { case (slot, (s, c)) =>
-          open.appendValue(SlotAcc(slot, s, c))
-        }
-        getHandle.registerTimer((pending.map(_._1).min + slotUs) / 1000L + 1)
-      }
-      out.result().iterator
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Double)],
-                                 timers: TimerValues): Iterator[EwmaPoint] =
-      step(key, rows.map(r => (r._2, r._3)).toList,
-        timers.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[EwmaPoint] =
-      step(key, Nil, timers.getCurrentWatermarkInMs())
-  }
 
   /** Smoothed stream over (keyCol: string, tsCol: timestamp, valueCol:
     * double). Append mode, event-time; sealed points equal the batch
@@ -129,17 +40,16 @@ object EwmaStream {
                slotDuration: java.time.Duration = java.time.Duration.ofHours(1))
       : Dataset[EwmaPoint] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .withWatermark("__t", lateness)
-      .select(col("__k"), unix_micros(col("__t")).as("__us"), col("__v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new EwmaProcessor(alpha, slotDuration.toNanos / 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
+    SealedSlots.run(events, keyCol, tsCol, valueCol, lateness,
+      new SealedSlots.Processor[Chain, EwmaPoint](slotDuration.toNanos / 1000L,
+        Encoders.product[Chain], _.lastSlotUs, { (key, ch, a) =>
+          val x = a.mean
+          val y = ch match {
+            case None => x
+            case Some(c) => alpha * x + (1 - alpha) * c.y
+          }
+          (Chain(a.slotUs, y),
+            Seq(EwmaPoint(key, SealedSlots.usToTimestamp(a.slotUs), x, y)))
+        }))
   }
 }

@@ -81,7 +81,7 @@ object FunnelStream {
             (done.isEmpty || e.tsUs > done.head)) {
           done = e.tsUs :: done
           out += StepDone(key, done.length, steps(done.length - 1),
-            FunnelStreamTime.usToTimestamp(e.tsUs))
+            SealedSlots.usToTimestamp(e.tsUs))
         }
       }
       prog.update(Progress(done))

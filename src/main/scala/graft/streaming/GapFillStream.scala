@@ -3,17 +3,15 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming gap-fill — the unbounded leg of
   * [[graft.operators.TimeSeries.gapFillLinear]]: as observed slots seal
-  * (watermark past slot end), every grid slot between the previous
-  * observation and the new one is emitted with the batch operator's two
-  * imputations — LOCF carries the previous sealed mean forward, and
-  * linear interpolation becomes computable EXACTLY when the bracketing
-  * observation arrives. The observed slot itself emits with v = ffill =
-  * interp = its mean, matching the batch rows.
+  * through the [[SealedSlots]] seal discipline, every grid slot between
+  * the previous observation and the new one is emitted with the batch
+  * operator's two imputations — LOCF carries the previous sealed mean
+  * forward, and linear interpolation becomes computable EXACTLY when the
+  * bracketing observation arrives. The observed slot itself emits with
+  * v = ffill = interp = its mean, matching the batch rows.
   *
   * Emission contract vs batch: identical rows for every slot from the
   * key's first observation through its last SEALED observation — the
@@ -25,9 +23,8 @@ import org.apache.spark.sql.streaming._
   * distance to the next observation (plus lateness), which is the
   * information-theoretic minimum for linear interpolation.
   *
-  * State per key: one (lastSlot, lastMean) record + open-slot DECIMAL
-  * partials inside the lateness horizon — O(open), grid length never
-  * enters state.
+  * State per key: one (lastSlot, lastMean) record + the open slot
+  * accumulators — O(open), grid length never enters state.
   */
 object GapFillStream {
 
@@ -40,77 +37,6 @@ object GapFillStream {
   /** Last sealed observation of the key. */
   final case class LastObs(slotUs: Long, v: Double)
 
-  final class GapFillProcessor(slotUs: Long)
-      extends StatefulProcessor[String, (String, Long, Double), GridPoint] {
-
-    @transient private var open: ListState[EwmaStream.SlotAcc] = _
-    @transient private var last: ValueState[LastObs] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getListState[EwmaStream.SlotAcc]("open",
-        Encoders.product[EwmaStream.SlotAcc], TTLConfig.NONE)
-      last = getHandle.getValueState[LastObs]("last",
-        Encoders.product[LastObs], TTLConfig.NONE)
-    }
-
-    private def step(key: String, incoming: List[(Long, Double)],
-                     wmMs: Long): Iterator[GridPoint] = {
-      val prev0 = Option(last.get())
-      val frontier = prev0.map(_.slotUs).getOrElse(Long.MinValue)
-      val merged = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      open.get().foreach { a =>
-        val (s, c) = merged.getOrElse(a.slotUs, (0L, 0L))
-        merged(a.slotUs) = (s + a.sum4, c + a.cnt)
-      }
-      incoming.foreach { case (us, v) =>
-        val slot = Math.floorDiv(us, slotUs) * slotUs
-        if (slot > frontier) {
-          val (s, c) = merged.getOrElse(slot, (0L, 0L))
-          merged(slot) = (s + EwmaStream.scaled4(v), c + 1L)
-        }
-      }
-      val (ripe, pending) = merged.toList.partition(_._1 + slotUs <= wmMs * 1000L)
-      val out = List.newBuilder[GridPoint]
-      var prev = prev0
-      ripe.sortBy(_._1).foreach { case (slot, (sum4, cnt)) =>
-        val x = (sum4.toDouble / 10000.0) / cnt
-        prev.foreach { p =>
-          // the batch interpolation tree, with pt/nt in grid units so the
-          // ratio is the same (t - pt)/(nt - pt) double division
-          val pt = p.slotUs / slotUs; val nt = slot / slotUs
-          var t = p.slotUs + slotUs
-          while (t < slot) {
-            val interp = p.v + (x - p.v) *
-              ((t / slotUs - pt).toDouble / (nt - pt).toDouble)
-            out += GridPoint(key, FunnelStreamTime.usToTimestamp(t), None,
-              p.v, interp)
-            t += slotUs
-          }
-        }
-        out += GridPoint(key, FunnelStreamTime.usToTimestamp(slot), Some(x), x, x)
-        prev = Some(LastObs(slot, x))
-      }
-      prev.foreach(last.update)
-      open.clear()
-      if (pending.nonEmpty) {
-        pending.foreach { case (slot, (s, c)) =>
-          open.appendValue(EwmaStream.SlotAcc(slot, s, c))
-        }
-        getHandle.registerTimer((pending.map(_._1).min + slotUs) / 1000L + 1)
-      }
-      out.result().iterator
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Double)],
-                                 timers: TimerValues): Iterator[GridPoint] =
-      step(key, rows.map(r => (r._2, r._3)).toList,
-        timers.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[GridPoint] =
-      step(key, Nil, timers.getCurrentWatermarkInMs())
-  }
-
   /** Dense-grid stream over (keyCol: string, tsCol: timestamp, valueCol:
     * double). Append mode, event-time; rows equal the batch
     * gapFillLinear output over the sealed range (GapFillStreamSpec). */
@@ -118,17 +44,23 @@ object GapFillStream {
              valueCol: String, lateness: String = "1 hour",
              slotDuration: java.time.Duration = java.time.Duration.ofHours(1))
       : Dataset[GridPoint] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .withWatermark("__t", lateness)
-      .select(col("__k"), unix_micros(col("__t")).as("__us"), col("__v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new GapFillProcessor(slotDuration.toNanos / 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
+    val slotUs = slotDuration.toNanos / 1000L
+    SealedSlots.run(events, keyCol, tsCol, valueCol, lateness,
+      new SealedSlots.Processor[LastObs, GridPoint](slotUs,
+        Encoders.product[LastObs], _.slotUs, { (key, prev, a) =>
+          val x = a.mean
+          val gaps = prev.toSeq.flatMap { p =>
+            // the batch interpolation tree, with pt/nt in grid units so
+            // the ratio is the same (t - pt)/(nt - pt) double division
+            val pt = p.slotUs / slotUs; val nt = a.slotUs / slotUs
+            (p.slotUs + slotUs until a.slotUs by slotUs).map { t =>
+              val interp = p.v + (x - p.v) *
+                ((t / slotUs - pt).toDouble / (nt - pt).toDouble)
+              GridPoint(key, SealedSlots.usToTimestamp(t), None, p.v, interp)
+            }
+          }
+          (LastObs(a.slotUs, x),
+            gaps :+ GridPoint(key, SealedSlots.usToTimestamp(a.slotUs), Some(x), x, x))
+        }))
   }
 }

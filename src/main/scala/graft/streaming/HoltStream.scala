@@ -3,8 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming Holt linear-trend smoothing — the unbounded leg of
   * `q_holt_trend`'s batch semantics: per key, the slot means
@@ -13,12 +11,8 @@ import org.apache.spark.sql.streaming._
   *   bₜ = β·(lₜ − lₜ₋₁) + (1−β)·bₜ₋₁
   * in slot order, each sealed point carrying the one-step-ahead
   * forecast lₜ + bₜ — the live capacity-planning signal (where is this
-  * series heading) next to [[CusumStream]]'s "did it drift".
-  *
-  * Same chain discipline as [[EwmaStream]]/[[CusumStream]]: open slots
-  * buffer as partial (sum, count) accumulators, seal in slot order once
-  * the watermark passes their end, fold into the chain, emit once.
-  * Append-clean; quiet-key timer; sealed-frontier straggler guard.
+  * series heading) next to [[CusumStream]]'s "did it drift". Slots
+  * enter the chain through the [[SealedSlots]] seal discipline.
   *
   * Arithmetic contract: identical IEEE trees to
   * [[graft.operators.TimeSeries.holtLinear]], so sealed stream points
@@ -30,77 +24,8 @@ object HoltStream {
   final case class HoltPoint(key: String, slot_ts: Timestamp, v: Double,
                              level: Double, trend: Double, forecast: Double)
 
-  /** Partial accumulator of a still-open slot (scaled-long decimal sum). */
-  final case class HoltSlotAcc(slotUs: Long, sum4: Long, cnt: Long)
-
   /** The smoothing chain: last sealed slot + current level and trend. */
   final case class HoltChain(lastSlotUs: Long, l: Double, b: Double)
-
-  final class HoltProcessor(alpha: Double, beta: Double, slotUs: Long)
-      extends StatefulProcessor[String, (String, Long, Double), HoltPoint] {
-
-    @transient private var open: ListState[HoltSlotAcc] = _
-    @transient private var chain: ValueState[HoltChain] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getListState[HoltSlotAcc]("open",
-        Encoders.product[HoltSlotAcc], TTLConfig.NONE)
-      chain = getHandle.getValueState[HoltChain]("chain",
-        Encoders.product[HoltChain], TTLConfig.NONE)
-    }
-
-    private def step(key: String, incoming: List[(Long, Double)],
-                     wmMs: Long): Iterator[HoltPoint] = {
-      val ch = Option(chain.get())
-      val frontier = ch.map(_.lastSlotUs).getOrElse(Long.MinValue)
-      val merged = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      open.get().foreach { a =>
-        val (s, c) = merged.getOrElse(a.slotUs, (0L, 0L))
-        merged(a.slotUs) = (s + a.sum4, c + a.cnt)
-      }
-      incoming.foreach { case (us, v) =>
-        val slot = Math.floorDiv(us, slotUs) * slotUs
-        if (slot > frontier) {
-          val (s, c) = merged.getOrElse(slot, (0L, 0L))
-          merged(slot) = (s + EwmaStream.scaled4(v), c + 1L)
-        }
-      }
-      val (ripe, pending) = merged.toList.partition(_._1 + slotUs <= wmMs * 1000L)
-      val out = List.newBuilder[HoltPoint]
-      var cur = ch
-      ripe.sortBy(_._1).foreach { case (slot, (sum4, cnt)) =>
-        val x = (sum4.toDouble / 10000.0) / cnt
-        // the batch scan's exact trees
-        val (l, b) = cur match {
-          case None => (x, 0.0)
-          case Some(c) =>
-            val lp = c.l
-            val l2 = alpha * x + (1 - alpha) * (lp + c.b)
-            (l2, beta * (l2 - lp) + (1 - beta) * c.b)
-        }
-        out += HoltPoint(key, FunnelStreamTime.usToTimestamp(slot), x, l, b, l + b)
-        cur = Some(HoltChain(slot, l, b))
-      }
-      cur.foreach(chain.update)
-      open.clear()
-      if (pending.nonEmpty) {
-        pending.foreach { case (slot, (s, c)) =>
-          open.appendValue(HoltSlotAcc(slot, s, c))
-        }
-        getHandle.registerTimer((pending.map(_._1).min + slotUs) / 1000L + 1)
-      }
-      out.result().iterator
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Double)],
-                                 timers: TimerValues): Iterator[HoltPoint] =
-      step(key, rows.map(r => (r._2, r._3)).toList,
-        timers.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[HoltPoint] =
-      step(key, Nil, timers.getCurrentWatermarkInMs())
-  }
 
   /** Level/trend/forecast stream over (keyCol: string, tsCol: timestamp,
     * valueCol: double). Append mode, event-time; sealed points equal the
@@ -113,17 +38,21 @@ object HoltStream {
       : Dataset[HoltPoint] = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0,1], got $beta")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .withWatermark("__t", lateness)
-      .select(col("__k"), unix_micros(col("__t")).as("__us"), col("__v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new HoltProcessor(alpha, beta, slotDuration.toNanos / 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
+    SealedSlots.run(events, keyCol, tsCol, valueCol, lateness,
+      new SealedSlots.Processor[HoltChain, HoltPoint](
+        slotDuration.toNanos / 1000L, Encoders.product[HoltChain],
+        _.lastSlotUs, { (key, ch, a) =>
+          val x = a.mean
+          // the batch scan's exact trees
+          val (l, b) = ch match {
+            case None => (x, 0.0)
+            case Some(c) =>
+              val lp = c.l
+              val l2 = alpha * x + (1 - alpha) * (lp + c.b)
+              (l2, beta * (l2 - lp) + (1 - beta) * c.b)
+          }
+          (HoltChain(a.slotUs, l, b), Seq(HoltPoint(key,
+            SealedSlots.usToTimestamp(a.slotUs), x, l, b, l + b)))
+        }))
   }
 }

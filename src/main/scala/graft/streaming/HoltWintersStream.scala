@@ -3,27 +3,21 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming Holt-Winters additive smoothing — the unbounded leg of
   * [[graft.operators.TimeSeries.holtWinters]]: per key, sealed slot
   * means feed the level/trend/seasonal recursion in slot order, each
   * post-warmup point carrying the one-step-ahead forecast
   * (l + b) + s_{t−m} — the live seasonal capacity signal next to
-  * [[HoltStream]]'s trend-only one.
+  * [[HoltStream]]'s trend-only one. Slots enter the chain through the
+  * [[SealedSlots]] seal discipline.
   *
-  * Warmup matches the batch convention: the first m sealed slots
-  * buffer; when the m-th seals, l₀ = their left-fold mean, s_p =
-  * x_p − l₀, and the m warm rows emit together (level l₀, trend 0,
-  * NULL forecast). After that every sealed slot steps the recursion
-  * with the IDENTICAL IEEE trees as the batch scan, so sealed stream
-  * points equal batch rows bit for bit (HoltWintersStreamSpec).
-  *
-  * Same chain discipline as [[HoltStream]]: open slots buffer as
-  * partial (sum, count) accumulators, seal in slot order once the
-  * watermark passes their end, fold into the chain, emit once.
-  * Append-clean; quiet-key timer reseals stragglers.
+  * Warmup matches the batch convention: the first m = `period` sealed slots
+  * buffer in the chain value; when the m-th seals, l₀ = their left-fold
+  * mean, s_p = x_p − l₀, and the m warm rows emit together (level l₀,
+  * trend 0, NULL forecast). After that every sealed slot steps the
+  * recursion with the IDENTICAL IEEE trees as the batch scan, so sealed
+  * stream points equal batch rows bit for bit (HoltWintersStreamSpec).
   */
 object HoltWintersStream {
 
@@ -33,107 +27,14 @@ object HoltWintersStream {
                            forecast: Option[Double])
 
   /** The smoothing chain: last sealed slot, row index, level, trend,
-    * and the m seasonal indices by phase (idx mod m). */
+    * the m seasonal indices by phase (idx mod m), and the sealed warmup
+    * observations. While warming (idx < m) only lastSlotUs, idx and
+    * warm are set; once warm, warm is empty. */
   final case class HwChain(lastSlotUs: Long, idx: Long, l: Double,
-                           b: Double, s: Seq[Double])
+                           b: Double, s: Seq[Double], warm: Seq[HwWarm])
 
   /** A sealed warmup observation waiting for the m-th slot. */
   final case class HwWarm(slotUs: Long, x: Double)
-
-  final class HwProcessor(m: Int, alpha: Double, beta: Double,
-                          gamma: Double, slotUs: Long)
-      extends StatefulProcessor[String, (String, Long, Double), HwPoint] {
-
-    @transient private var open: ListState[HoltStream.HoltSlotAcc] = _
-    @transient private var warm: ListState[HwWarm] = _
-    @transient private var chain: ValueState[HwChain] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      open = getHandle.getListState[HoltStream.HoltSlotAcc]("open",
-        Encoders.product[HoltStream.HoltSlotAcc], TTLConfig.NONE)
-      warm = getHandle.getListState[HwWarm]("warm",
-        Encoders.product[HwWarm], TTLConfig.NONE)
-      chain = getHandle.getValueState[HwChain]("chain",
-        Encoders.product[HwChain], TTLConfig.NONE)
-    }
-
-    private def step(key: String, incoming: List[(Long, Double)],
-                     wmMs: Long): Iterator[HwPoint] = {
-      val ch = Option(chain.get())
-      val warmed = warm.get().toList.sortBy(_.slotUs)
-      val frontier = ch.map(_.lastSlotUs)
-        .orElse(warmed.lastOption.map(_.slotUs)).getOrElse(Long.MinValue)
-      val merged = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-      open.get().foreach { a =>
-        val (s, c) = merged.getOrElse(a.slotUs, (0L, 0L))
-        merged(a.slotUs) = (s + a.sum4, c + a.cnt)
-      }
-      incoming.foreach { case (us, v) =>
-        val slot = Math.floorDiv(us, slotUs) * slotUs
-        if (slot > frontier) {
-          val (s, c) = merged.getOrElse(slot, (0L, 0L))
-          merged(slot) = (s + EwmaStream.scaled4(v), c + 1L)
-        }
-      }
-      val (ripe, pending) = merged.toList.partition(_._1 + slotUs <= wmMs * 1000L)
-      val out = List.newBuilder[HwPoint]
-      var cur = ch
-      var warmBuf = warmed
-      ripe.sortBy(_._1).foreach { case (slot, (sum4, cnt)) =>
-        val x = (sum4.toDouble / 10000.0) / cnt
-        cur match {
-          case None =>
-            warmBuf = warmBuf :+ HwWarm(slot, x)
-            if (warmBuf.length == m) {
-              // batch init: left-fold mean, seasonal = residuals
-              var acc = 0.0
-              warmBuf.foreach(w => acc = acc + w.x)
-              val l0 = acc / m
-              val s = warmBuf.map(_.x - l0).toArray
-              warmBuf.zipWithIndex.foreach { case (w, p) =>
-                out += HwPoint(key, FunnelStreamTime.usToTimestamp(w.slotUs),
-                  w.x, l0, 0.0, s(p), None)
-              }
-              cur = Some(HwChain(slot, m.toLong, l0, 0.0, s.toSeq))
-            }
-          case Some(c) =>
-            val p = (c.idx % m).toInt
-            val s = c.s.toArray
-            val sOld = s(p)
-            val fc = (c.l + c.b) + sOld
-            val lp = c.l
-            val l = alpha * (x - sOld) + (1 - alpha) * (c.l + c.b)
-            val b = beta * (l - lp) + (1 - beta) * c.b
-            s(p) = gamma * (x - l) + (1 - gamma) * sOld
-            out += HwPoint(key, FunnelStreamTime.usToTimestamp(slot),
-              x, l, b, s(p), Some(fc))
-            cur = Some(HwChain(slot, c.idx + 1, l, b, s.toSeq))
-        }
-      }
-      cur.foreach(chain.update)
-      if (cur.isEmpty) {
-        warm.clear()
-        warmBuf.foreach(warm.appendValue)
-      } else if (ch.isEmpty) warm.clear()
-      open.clear()
-      if (pending.nonEmpty) {
-        pending.foreach { case (slot, (s, c)) =>
-          open.appendValue(HoltStream.HoltSlotAcc(slot, s, c))
-        }
-        getHandle.registerTimer((pending.map(_._1).min + slotUs) / 1000L + 1)
-      }
-      out.result().iterator
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long, Double)],
-                                 timers: TimerValues): Iterator[HwPoint] =
-      step(key, rows.map(r => (r._2, r._3)).toList,
-        timers.getCurrentWatermarkInMs())
-
-    override def handleExpiredTimer(key: String, timers: TimerValues,
-                                    expired: ExpiredTimerInfo): Iterator[HwPoint] =
-      step(key, Nil, timers.getCurrentWatermarkInMs())
-  }
 
   /** Level/trend/seasonal/forecast stream over (keyCol: string, tsCol:
     * timestamp, valueCol: double). Append mode, event-time; sealed
@@ -149,18 +50,40 @@ object HoltWintersStream {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
     require(beta >= 0 && beta <= 1, s"beta must be in [0,1], got $beta")
     require(gamma >= 0 && gamma <= 1, s"gamma must be in [0,1], got $gamma")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .withWatermark("__t", lateness)
-      .select(col("__k"), unix_micros(col("__t")).as("__us"), col("__v"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .transformWithState(
-        new HwProcessor(period, alpha, beta, gamma,
-          slotDuration.toNanos / 1000L),
-        TimeMode.EventTime(), OutputMode.Append())
+    SealedSlots.run(events, keyCol, tsCol, valueCol, lateness,
+      new SealedSlots.Processor[HwChain, HwPoint](
+        slotDuration.toNanos / 1000L, Encoders.product[HwChain],
+        _.lastSlotUs, { (key, ch, a) =>
+          val x = a.mean
+          ch match {
+            case Some(c) if c.idx >= period =>
+              val p = (c.idx % period).toInt
+              val sOld = c.s(p)
+              val fc = (c.l + c.b) + sOld
+              val lp = c.l
+              val l = alpha * (x - sOld) + (1 - alpha) * (c.l + c.b)
+              val b = beta * (l - lp) + (1 - beta) * c.b
+              val sp = gamma * (x - l) + (1 - gamma) * sOld
+              (HwChain(a.slotUs, c.idx + 1, l, b, c.s.updated(p, sp), Nil),
+                Seq(HwPoint(key, SealedSlots.usToTimestamp(a.slotUs), x, l, b,
+                  sp, Some(fc))))
+            case _ =>
+              val warm = ch.fold(Seq.empty[HwWarm])(_.warm) :+ HwWarm(a.slotUs, x)
+              if (warm.length < period)
+                (HwChain(a.slotUs, warm.length.toLong, 0.0, 0.0, Nil, warm), Nil)
+              else {
+                // batch init: left-fold mean, seasonal = residuals
+                var acc = 0.0
+                warm.foreach(w => acc = acc + w.x)
+                val l0 = acc / period
+                val s = warm.map(_.x - l0)
+                (HwChain(a.slotUs, period.toLong, l0, 0.0, s, Nil),
+                  warm.zip(s).map { case (w, sp) =>
+                    HwPoint(key, SealedSlots.usToTimestamp(w.slotUs), w.x, l0,
+                      0.0, sp, None)
+                  })
+              }
+          }
+        }))
   }
 }

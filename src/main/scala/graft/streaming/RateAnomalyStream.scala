@@ -72,7 +72,7 @@ object RateAnomalyStream {
         val tSum = tail.map(_.n).sum
         val tCnt = tail.length.toLong
         if (tCnt >= minTrail)
-          out += RateFlag(key, FunnelStreamTime.usToTimestamp(hourUs), n,
+          out += RateFlag(key, SealedSlots.usToTimestamp(hourUs), n,
             tSum, tCnt,
             n * tCnt > tSum * 2, n * tCnt * 2 < tSum)
         trail = (trail :+ HourCount(hourUs, n)).takeRight(trailLen)
@@ -112,14 +112,5 @@ object RateAnomalyStream {
       .groupByKey(_._1)
       .transformWithState(new RateProcessor(trailLen, minTrail),
         TimeMode.EventTime(), OutputMode.Append())
-  }
-}
-
-/** Shared µs→Timestamp conversion for the sealed-replay processors. */
-private[streaming] object FunnelStreamTime {
-  def usToTimestamp(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
   }
 }

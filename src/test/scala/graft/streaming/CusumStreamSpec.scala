@@ -87,7 +87,9 @@ class CusumStreamSpec extends SparkSpec {
 
     val q1 = start()
     try {
-      input.addData(Seq(("a", ts(0), 8.0), ("a", ts(0), 4.0), ("a", ts(5), 1.0)))
+      // b has no target: its slots seal but emit nothing
+      input.addData(Seq(("a", ts(0), 8.0), ("a", ts(0), 4.0), ("a", ts(5), 1.0),
+        ("b", ts(0), 7.0), ("b", ts(2), 1.0)))
       q1.processAllAvailable()
     } finally q1.stop()
     val first = spark.read.parquet(out)
@@ -98,7 +100,7 @@ class CusumStreamSpec extends SparkSpec {
 
     val q2 = start()
     try {
-      input.addData(Seq(("a", ts(9), 3.0)))
+      input.addData(Seq(("a", ts(9), 3.0), ("b", ts(6), 5.0)))
       q2.processAllAvailable()
     } finally q2.stop()
     val second = spark.read.parquet(out)
@@ -107,6 +109,7 @@ class CusumStreamSpec extends SparkSpec {
     // slot 5 seals after restart from the state-store s=3.5:
     // s = max(0, 3.5 + 1 - 2 - 0.5) = 2.0; slot 0 is NOT re-emitted
     assert(second.toSet == Set(("a", 6.0, 3.5, false), ("a", 1.0, 2.0, false)))
+    assert(second.count(_._1 == "b") == 0)
 
     // unmonitored key: no emission even when its slots seal
     val q3 = start()

@@ -61,4 +61,40 @@ class GapFillStreamSpec extends SparkSpec {
       s"missing=${(batch -- got).take(3)} extra=${(got -- batch).take(3)}")
     assert(got.exists(_._3.isEmpty), "no gap row in the fixture — vacuous")
   }
+
+  test("a checkpoint restart between two observations emits the gap rows") {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-gf-rs").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-gf-rs-out").toString
+    val t0 = 472222L * 3600000L // hour-aligned, so ts(h) is a slot start
+    def ts(h: Long) = new Timestamp(t0 + h * 3600000L)
+
+    val input = MemoryStream[(String, Timestamp, Double)](4717, spark, None)
+    def start() = GapFillStream.filled(
+        input.toDS().toDF("k", "ts", "v"), "k", "ts", "v", lateness = "1 hour")
+      .writeStream.format("parquet").option("path", out)
+      .outputMode("append").option("checkpointLocation", ckpt).start()
+    def emitted() = spark.read.parquet(out)
+      .select("key", "slot_ts", "v", "ffill", "interp").as[Row4].collect()
+
+    val q1 = start()
+    try {
+      input.addData(Seq(("a", ts(0), 2.0), ("a", ts(3), 8.0)))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // wm = hour 2: slot 0 sealed, slot 3 still open
+    assert(emitted().toSet == Set(("a", ts(0), Some(2.0), 2.0, 2.0)))
+
+    val q2 = start()
+    try {
+      input.addData(Seq(("a", ts(6), 0.0)))
+      q2.processAllAvailable()
+    } finally q2.stop()
+    // slot 3 seals after the restart: the gap rows 1 and 2 interpolate
+    // from the checkpointed last observation (slot 0, 2.0)
+    assert(emitted().toSet == Set(
+      ("a", ts(0), Some(2.0), 2.0, 2.0),
+      ("a", ts(1), None, 2.0, 2.0 + (8.0 - 2.0) * (1.0 / 3.0)),
+      ("a", ts(2), None, 2.0, 2.0 + (8.0 - 2.0) * (2.0 / 3.0)),
+      ("a", ts(3), Some(8.0), 8.0, 8.0)))
+  }
 }
