@@ -73,9 +73,7 @@ object HoltWintersStream {
                 (HwChain(a.slotUs, warm.length.toLong, 0.0, 0.0, Nil, warm), Nil)
               else {
                 // batch init: left-fold mean, seasonal = residuals
-                var acc = 0.0
-                warm.foreach(w => acc = acc + w.x)
-                val l0 = acc / period
+                val l0 = warm.foldLeft(0.0)(_ + _.x) / period
                 val s = warm.map(_.x - l0)
                 (HwChain(a.slotUs, period.toLong, l0, 0.0, s, Nil),
                   warm.zip(s).map { case (w, sp) =>
